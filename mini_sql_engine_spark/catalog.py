@@ -7,15 +7,22 @@ one ``StructType`` per table (schemas profiled from the driver's
 parquet test data — FIXTURES.md §B), registered as Spark temp views.
 
 Scale notes:
-- Schemas are declared, never inferred: at 100 TB, ``inferSchema``
-  means an extra full pass over the data.
+- Each table's parquet schema is inferred once per file version
+  (path, mtime, size) per process and checked against
+  ``TABLE_SCHEMAS``; later reads pass the inferred schema back to
+  the reader, so a query build launches no footer-inference job. The
+  declared schema is not used for reading: it cannot read a
+  ``TIMESTAMP(NANOS)`` column under ``nanosAsLong``, and a renamed
+  column would come back as NULLs instead of failing. The version
+  comes from driver-local ``os.stat``, so ``sf_dir`` must be a
+  filesystem the driver mounts.
 - ``BROADCAST_TABLES`` marks dimension tables that are safely below
   any sane broadcast threshold at *any* scale factor (region/nation
   are fixed-size; supplier/part grow sublinearly). Join helpers use
   this to emit explicit ``F.broadcast`` hints so the 100 TB plan never
   falls back to a sort-merge join against a 5-row table.
-- Reads validate the on-disk schema against the declared one (name +
-  type check) instead of forcing a cast — a silent coercion at scale
+- Reads validate the on-disk schema against the declared one (column
+  names and order) instead of forcing a cast — a silent coercion at scale
   is a correctness bug.
 """
 
@@ -127,6 +134,12 @@ TABLES = tuple(TABLE_SCHEMAS)
 # Dimension tables small enough to broadcast at any scale factor.
 BROADCAST_TABLES = frozenset({"region", "nation", "supplier"})
 
+# (abs path, st_mtime_ns, st_size) -> the schema Spark inferred for that
+# file version, already checked by _validate_schema. Process-wide because
+# every query build makes a fresh Catalog; a rewritten file is a new key,
+# and two threads missing the same key both store the same schema.
+_INFERRED: dict[tuple[str, int, int], T.StructType] = {}
+
 EMBEDDING_DIM = 64
 
 
@@ -160,10 +173,17 @@ class Catalog:
     def table(self, name: str) -> DataFrame:
         """Load one table (cached DataFrame; lazy — no data read yet)."""
         if name not in self._cache:
-            df = self.spark.read.parquet(self.path(name))
-            df = _coerce_nanos(df)
-            _validate_schema(name, df.schema)
-            self._cache[name] = df
+            path = self.path(name)
+            st = os.stat(path)
+            version = (os.path.abspath(path), st.st_mtime_ns, st.st_size)
+            schema = _INFERRED.get(version)
+            if schema is None:
+                df = self.spark.read.parquet(path)
+                _validate_schema(name, df.schema)
+                _INFERRED[version] = df.schema
+            else:
+                df = self.spark.read.schema(schema).parquet(path)
+            self._cache[name] = _coerce_nanos(df)
         return self._cache[name]
 
     def register_all(self) -> None:
@@ -215,8 +235,3 @@ def _validate_schema(name: str, actual: T.StructType) -> None:
             f"schema drift for table {name!r}: expected columns {exp_names}, got {act_names}"
         )
 
-
-def load_tables(spark: SparkSession, sf_dir: str, *names: str) -> tuple[DataFrame, ...]:
-    """Convenience: load several tables from one sf dir."""
-    cat = Catalog(spark, sf_dir)
-    return tuple(cat.table(n) for n in names)
