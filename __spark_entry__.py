@@ -7,6 +7,15 @@
 without a faithful SQL twin (approximate/hash-seeded/UDF-backed ops)
 are omitted → rows-only check, with pytest numpy/python oracles in
 ``tests/`` (see mini_sql_engine_spark.oracles docstring for the list).
+
+Build/execute contract of ``queries()``: some frames read executor-local
+checkpoints, and every call of a ``queries()`` callable frees the
+checkpoints of the previous call's frame. Build, execute and discard
+one frame at a time; a frame executed after a later build fails with
+``CHECKPOINT_RDD_BLOCK_ID_NOT_FOUND`` (never wrong rows). Callers that
+must hold several built frames at once, or build from several threads,
+set ``SPARK_GRAFT_KEEP_CHECKPOINTS=1`` and keep every checkpoint until
+the session ends.
 """
 
 from __future__ import annotations

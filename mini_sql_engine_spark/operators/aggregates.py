@@ -40,12 +40,6 @@ def exact_sum(col: str | Column, alias: str) -> Column:
     return F.sum(money(col)).cast("double").alias(alias)
 
 
-def exact_avg(col: str | Column, alias: str, decimals: int = 6) -> Column:
-    """Order-independent average: exact decimal sum / count, rounded."""
-    c = F.col(col) if isinstance(col, str) else col
-    return F.round(F.sum(money(c)).cast("double") / F.count(c), decimals).alias(alias)
-
-
 def scalar_aggs(df: DataFrame, col: str) -> DataFrame:
     """The reference's whole-table aggregate set over one column:
     MAX, MIN, SUM, AVG, COUNT (+ COUNT(*))."""

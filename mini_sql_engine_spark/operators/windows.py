@@ -1,10 +1,10 @@
-"""Window (analytic) functions: ranking, lag/lead, frame aggregates.
+"""Window (analytic) functions: the shared window spec.
 
 Absent in the reference (SURVEY.md §2.8, [SPEC-HIGH]) — capability
 extensions, all Spark built-ins. A window = one shuffle on the
 partition keys + per-partition sort; all functions over the same
-(partitionBy, orderBy) share that single exchange, so helpers below
-take a window spec once and add many columns.
+(partitionBy, orderBy) share that single exchange, so callers build
+one spec and add many columns over it.
 
 Determinism: every ``orderBy`` here must reach a total order within
 the partition (include a unique key) — ``row_number`` over ties is
@@ -13,31 +13,9 @@ otherwise partitioning-dependent.
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame
-from pyspark.sql import functions as F
+from pyspark.sql import Column
 from pyspark.sql.window import Window, WindowSpec
 
 
 def spec(partition_by: list[str | Column], order_by: list[Column | str]) -> WindowSpec:
     return Window.partitionBy(*partition_by).orderBy(*order_by)
-
-
-def with_ranks(df: DataFrame, w: WindowSpec) -> DataFrame:
-    """row_number / rank / dense_rank over one shared window."""
-    return (
-        df.withColumn("row_number", F.row_number().over(w))
-        .withColumn("rank", F.rank().over(w))
-        .withColumn("dense_rank", F.dense_rank().over(w))
-    )
-
-
-def with_lag_lead(df: DataFrame, w: WindowSpec, col: str, offset: int = 1) -> DataFrame:
-    return df.withColumn(f"lag_{col}", F.lag(col, offset).over(w)).withColumn(
-        f"lead_{col}", F.lead(col, offset).over(w)
-    )
-
-
-def with_running(df: DataFrame, w: WindowSpec, agg_col: str, alias: str) -> DataFrame:
-    """Running (cumulative) sum: frame = unbounded preceding → current."""
-    frame = w.rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    return df.withColumn(alias, F.sum(agg_col).over(frame))

@@ -247,8 +247,9 @@ def training_pipeline_stats(
     branch per stage, and without barriers each branch re-runs its
     whole stage prefix — prefix work that grows quadratically with
     stage count at scale (locally ~12% because the CC stage's own
-    iterative rounds dominate). At 100 TB use durable path-based
-    checkpoints between stages instead — same structure, spill-proof.
+    iterative rounds dominate). The barriers are executor-local
+    checkpoints with no lineage, so losing an executor mid-pipeline
+    fails the query rather than recomputing the lost stage.
 
     r14 A/B (VERDICT item 4, "overlap the serialized stages"):
     the stage chain is DATA-dependent-linear (each stage consumes the

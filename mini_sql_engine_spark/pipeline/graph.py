@@ -32,13 +32,6 @@ from pyspark.sql import functions as F
 
 from mini_sql_engine_spark.plans import materialized, release
 
-# Measurement-only instrumentation (VERDICT r9 #2): rounds the last
-# connected_components* call took to converge, keyed by algorithm.
-# Pins the O(log diameter) claim with data per scale decade
-# (scripts/cc_faceoff.py logs it into BENCH_SCALE100.json). Not part
-# of any query contract — results never depend on it.
-LAST_ROUNDS: dict = {}
-
 
 def connected_components(
     pairs: DataFrame,
@@ -53,6 +46,10 @@ def connected_components(
     Raises ``RuntimeError`` if the graph has not converged after
     ``max_rounds`` (diameter > max_rounds) rather than returning a
     silently-wrong partial labeling.
+
+    Large-star/small-star alternation (Kiveris et al., SoCC'14) was
+    measured and rejected: 2.89 vs 2.47 s at 10x and 2.68 vs 2.59 s at
+    100x, same labels, 2 rounds each (BENCH_CC_FACEOFF.json).
     """
     edges = pairs.select(
         F.col(src).alias("u"), F.col(dst).alias("v")
@@ -69,7 +66,7 @@ def connected_components(
     )
     prev_ck = labels  # the checkpoint frame backing `labels`
 
-    for _round in range(max_rounds):
+    for _ in range(max_rounds):
         # min label over each node's neighbors — one keyed shuffle
         neighbor_min = (
             sym.join(labels, sym["v"] == labels["node"])
@@ -113,114 +110,11 @@ def connected_components(
         prev_ck = new_labels
         labels = new_labels.select("node", "component")
         if n_changed == 0:
-            LAST_ROUNDS["min_label"] = _round + 1
             release(sym)  # returned labels are a checkpoint — the
             return labels  # symmetric edge set is no longer reachable
     raise RuntimeError(
         f"connected_components: no convergence in {max_rounds} rounds "
         "(log-diameter exceeds budget — raise max_rounds)"
-    )
-
-
-def _large_star(sym: DataFrame) -> DataFrame:
-    """One large-star step (Kiveris et al., SoCC'14 "Connected
-    Components in MapReduce and Beyond", public): every node attaches
-    all of its STRICTLY LARGER neighbors to the minimum of its closed
-    neighborhood. ``sym`` holds both directions of every edge; output
-    is the new undirected edge set (u > v canonical orientation not
-    yet applied — _small_star canonicalizes)."""
-    m = (sym.groupBy("u").agg(F.min("v").alias("_nm"))
-         .select("u", F.least(F.col("u"), F.col("_nm")).alias("_m")))
-    return (
-        sym.filter(F.col("v") > F.col("u"))
-        .join(m, "u")
-        .select(F.col("v").alias("u"), F.col("_m").alias("v"))
-        .filter(F.col("u") != F.col("v"))
-        .distinct()
-    )
-
-
-def _small_star(edges: DataFrame) -> DataFrame:
-    """One small-star step: orient every edge (big, small); every node
-    attaches all of its SMALLER neighbors — and itself — to the
-    minimum of those neighbors."""
-    d = (edges.select(F.greatest("u", "v").alias("u"),
-                      F.least("u", "v").alias("v"))
-         .filter(F.col("u") != F.col("v"))
-         .distinct())
-    m = d.groupBy("u").agg(F.min("v").alias("_m"))
-    return (
-        d.join(m, "u")
-        .select(F.col("v").alias("u"), F.col("_m").alias("v"))
-        .union(m.select(F.col("u"), F.col("_m").alias("v")))
-        .filter(F.col("u") != F.col("v"))
-        .distinct()
-    )
-
-
-def connected_components_star(
-    pairs: DataFrame,
-    src: str = "doc_a",
-    dst: str = "doc_b",
-    max_rounds: int = 50,
-) -> DataFrame:
-    """The alternating large-star/small-star CC of Kiveris et al.
-    (SoCC'14) — the measured head-to-head alternative to
-    ``connected_components``'s min-label propagation (VERDICT r9 #2).
-    Same output contract: (node, component) with component = minimum
-    reachable node id; deterministic in the edge set.
-
-    Shape per round: large-star is one keyed min-agg + one join over
-    the symmetric edge list; small-star the same over the (big, small)
-    orientation; each output is distinct-ed (a second shuffle per
-    step). Converges when the edge set reaches a fixed point (a union
-    of min-centered stars); convergence is detected by an
-    (edge-count, xxhash64-bit_xor) signature — the edge set is
-    distinct so xor cannot cancel duplicates, collision odds are
-    ~2^-64 per round, and the faceoff's pytest cross-checks the full
-    labeling against the min-label implementation exactly.
-
-    Scale notes vs min-label: edge-set size can SHRINK across rounds
-    (stars collapse duplicate attachments), but each round runs four
-    shuffles (two agg+join pairs, two distincts) against min-label's
-    three join-shaped shuffles on a never-growing label table.
-    ``localCheckpoint`` per round keeps lineage O(1) as in min-label.
-    scripts/cc_faceoff.py times both at 10x/100x and records the
-    keep/reject decision in BASELINE.md.
-    """
-    edges = (
-        pairs.select(F.col(src).alias("u"), F.col(dst).alias("v"))
-        .filter(F.col("u") != F.col("v"))
-        .distinct()
-    )
-    prev_sig = None
-    prev_ck = None  # previous round's edge checkpoint (r14: released
-    for _round in range(max_rounds):  # once the next round lands)
-        sym = edges.union(
-            edges.select(F.col("v").alias("u"), F.col("u").alias("v")))
-        edges = materialized(_small_star(_large_star(sym)))
-        if prev_ck is not None:
-            release(prev_ck)
-        prev_ck = edges
-        n, hs = edges.agg(
-            F.count(F.lit(1)),
-            F.bit_xor(F.xxhash64("u", "v")),
-        ).first()
-        sig = (n, hs)
-        if sig == prev_sig:
-            LAST_ROUNDS["star"] = _round + 1
-            # fixed point: edges are (child, center) stars with the
-            # component min as center; centers label themselves
-            return edges.select(
-                F.col("u").alias("node"), F.col("v").alias("component")
-            ).union(
-                edges.select(F.col("v").alias("node"),
-                             F.col("v").alias("component")).distinct()
-            )
-        prev_sig = sig
-    raise RuntimeError(
-        f"connected_components_star: no convergence in {max_rounds} "
-        "rounds (raise max_rounds)"
     )
 
 

@@ -51,10 +51,6 @@ def _safe_denom(n: Column) -> Column:
     return F.when(n > 0, n).otherwise(F.lit(1.0))
 
 
-def with_norm(df: DataFrame, vec_col: str = "embedding") -> DataFrame:
-    return df.withColumn("_norm", _norm(F.col(vec_col)))
-
-
 def brute_force_topk(
     corpus: DataFrame,
     queries: DataFrame,

@@ -10,10 +10,8 @@ plan is: compute once, materialize, fan out.
 
 ``materialized`` uses ``localCheckpoint`` — executor-local blocks, no
 lineage, computed exactly once and shared by every consumer in the
-same action. On a real cluster local checkpoints don't survive
-executor loss; a 100 TB run with long downstream stages should write
-the derived table to durable storage instead (parquet + re-read),
-which this helper models with ``path=``.
+same action. Local checkpoints don't survive executor loss: a query
+that loses an executor mid-action fails instead of recomputing.
 """
 
 from __future__ import annotations
@@ -78,7 +76,7 @@ def new_generation() -> None:
 
 def release(df: DataFrame) -> None:
     """Immediately free the local-checkpoint blocks backing ``df`` (a
-    frame returned by ``materialized(path=None)``). Only for call
+    frame returned by ``materialized``). Only for call
     sites that OWN the frame's lifetime — e.g. an iterative loop whose
     round-N state is dead once round N+1 has materialized."""
     try:
@@ -98,68 +96,11 @@ def release(df: DataFrame) -> None:
     _TRACKED[:] = keep
 
 
-_DURABLE_SEQ: int = 0
-
-
-def _durable_path_for(df: DataFrame) -> str | None:
-    """Size-threshold selection of the durable arm (r14, VERDICT
-    item 8 — the POLICY that picks between the two materialization
-    arms instead of leaving ``path=`` dead code):
-
-    * ``SPARK_GRAFT_DURABLE_DIR`` unset (the default, and the local
-      bench/driver configuration) → always ``None``: eager
-      localCheckpoint, identical behavior to every previous round.
-    * ``SPARK_GRAFT_DURABLE_DIR`` set → frames whose Catalyst
-      size estimate (``optimizedPlan().stats().sizeInBytes`` —
-      driver-side only, no job) meets
-      ``SPARK_GRAFT_DURABLE_MIN_BYTES`` (default 8 GiB) round-trip
-      through parquet under that directory instead. Rationale: a
-      local checkpoint of a big multi-consumer frame pins executor
-      memory/disk AND dies with any executor (recompute-from-nothing
-      mid-pipeline); once the frame is big enough that re-reading
-      columnar parquet is bandwidth-comparable, durability is free
-      insurance. Small frames keep the low-latency local arm —
-      exactly the trade measured all round (eager barriers cost more
-      than they save below ~10⁶ rows).
-
-    The threshold is scale-adaptive configuration, not a local tune:
-    local defaults keep the bench identical, a 100 TB deployment
-    sets the directory (HDFS/S3) and, optionally, its own floor."""
-    root = os.environ.get("SPARK_GRAFT_DURABLE_DIR")
-    if not root:
-        return None
-    try:
-        min_bytes = int(os.environ.get(
-            "SPARK_GRAFT_DURABLE_MIN_BYTES", str(8 << 30)))
-        est = int(df._jdf.queryExecution().optimizedPlan()
-                  .stats().sizeInBytes())
-    except Exception:  # pragma: no cover - non-queryable plan
-        return None
-    if est < min_bytes:
-        return None
-    global _DURABLE_SEQ
-    _DURABLE_SEQ += 1
-    return os.path.join(root, f"ck_{os.getpid()}_{_DURABLE_SEQ}")
-
-
-def materialized(df: DataFrame, path: str | None = None) -> DataFrame:
-    """Force ``df`` to compute once and be re-read by all consumers.
-
-    ``path=None`` → the size policy in ``_durable_path_for`` picks
-    the arm: eager ``localCheckpoint`` (fast, non-resilient — fine
-    for single-action fan-out, and the unconditional local default),
-    or a durable parquet round-trip for frames above the configured
-    size floor when ``SPARK_GRAFT_DURABLE_DIR`` is set (the
-    cluster-grade variant for multi-hour pipelines). ``path=...`` →
-    durable round-trip at exactly that path, policy bypassed.
-    Local checkpoints are tracked so their blocks are freed once the
-    consuming query's lifetime ends (see ``new_generation``).
-    """
-    if path is None:
-        path = _durable_path_for(df)
-    if path is not None:
-        df.write.mode("overwrite").parquet(path)
-        return df.sparkSession.read.parquet(path)
+def materialized(df: DataFrame) -> DataFrame:
+    """Force ``df`` to compute once (eager ``localCheckpoint``) and be
+    re-read by all consumers. The checkpoint is tracked so its blocks
+    are freed once the consuming query's lifetime ends (see
+    ``new_generation``)."""
     ck = df.localCheckpoint(eager=True)
     _track(ck)
     return ck

@@ -3442,9 +3442,13 @@ def pagerank_iter(spark, sf_dir):
     (id·13+2) mod N — deterministic, so reruns agree). The iterative
     join-agg showcase beside `dedup_cc`: contributions = rank /
     out-degree shuffled by target, merged with the teleport term;
-    `localCheckpoint` per round keeps lineage O(1). Rows-only
-    contract (float accumulation order across engines); the numpy
-    twin in tests/test_round8_ops.py pins the values."""
+    a `materialized()` barrier per round keeps lineage O(1) and is
+    freed by the next build. sf0.1, 4 vCPUs, min-of-7, median of 5
+    alternating runs: untracked lazy checkpoints 2.19 s, eager
+    `materialized()` 2.36 s, tracked lazy checkpoints 2.31 s (paired
+    runs split 3/2, within noise). Rows-only contract (float
+    accumulation order across engines); the numpy twin in
+    tests/test_round8_ops.py pins the values."""
     d = Catalog(spark, sf_dir).table("documents").select("doc_id")
     n_docs = d.count()  # scalar cardinality for the teleport term
     edges = d.select(
@@ -3464,14 +3468,13 @@ def pagerank_iter(spark, sf_dir):
                     (F.col("rank") / F.col("deg")).alias("c"))
             .groupBy("doc_id").agg(F.sum("c").alias("c"))
         )
-        ranks = (
+        ranks = PL.materialized(
             d.join(contrib, "doc_id", "left")
             .select(
                 "doc_id",
                 (F.lit(0.15 / n_docs)
                  + F.lit(0.85) * F.coalesce(F.col("c"), F.lit(0.0))
                  ).alias("rank"))
-            .localCheckpoint(eager=False)
         )
     return ranks.select("doc_id", F.round("rank", 8).alias("rank"))
 
@@ -8001,8 +8004,8 @@ def quantile_normalize_approx(spark, sf_dir, grid=2001, accuracy=10000):
     1/accuracy; in value space that is at most one adjacent order
     statistic for any distribution with ≥ that many rows per distinct
     value (l_quantity: 50 distinct values, so ~N/50 rows each —
-    orders of magnitude above the bound). scripts/qn_faceoff.py times
-    exact vs approx at 10x/100x; keep/reject lives in BASELINE.md."""
+    orders of magnitude above the bound). Exact vs approx at 10x/100x:
+    BENCH_QN_FACEOFF.json; keep/reject lives in BASELINE.md."""
     li = Catalog(spark, sf_dir).table("lineitem")
     v = li.select("l_orderkey", "l_linenumber",
                   F.col("l_returnflag").alias("g"),

@@ -20,11 +20,11 @@ import argparse
 import json
 import os
 import sys
-import time
 
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 sys.path.insert(0, REPO)
 
+from bench import force, timed_min  # noqa: E402
 from mini_sql_engine_spark.queries import QUERIES  # noqa: E402
 from mini_sql_engine_spark.session import get_spark  # noqa: E402
 
@@ -47,8 +47,7 @@ def main() -> None:
         extra_conf={"spark.ui.showConsoleProgress": "false"},
     )
     # warm up JVM / codegen / parquet footers
-    QUERIES["group_agg"](spark, args.sf_dir).write.format("noop").mode(
-        "overwrite").save()
+    force(QUERIES["group_agg"](spark, args.sf_dir))
 
     out: dict[str, float] = {}
     for key in args.keys:
@@ -60,14 +59,9 @@ def main() -> None:
             with open(os.path.join(plans_dir, f"{key}_{args.tag}.txt"),
                       "w") as fh:
                 fh.write(plan)
-        best = float("inf")
-        for _ in range(args.reps):
-            spark.sparkContext.setJobDescription(f"probe:{key}")
-            t0 = time.perf_counter()
-            fn(spark, args.sf_dir).write.format("noop").mode(
-                "overwrite").save()
-            best = min(best, time.perf_counter() - t0)
-        out[key] = round(best, 3)
+        spark.sparkContext.setJobDescription(f"probe:{key}")
+        out[key] = timed_min(lambda: force(fn(spark, args.sf_dir)),
+                             base_reps=args.reps, fast_reps=args.reps)
         print(json.dumps({key: out[key]}), flush=True)
     print(json.dumps({"tag": args.tag, "timings": out}), flush=True)
 

@@ -170,18 +170,14 @@ def time_queries(spark, sf_dir: str, keys: list[str],
     # min-of-N with bench.py's adaptive sub-second top-up (ADVICE r9:
     # min-of-2 left the 100x-factor DENOMINATORS — several of which
     # are sub-second at 10x — on a noisier floor than the bench keys)
-    from bench import timed_min
+    from bench import force, timed_min
     from mini_sql_engine_spark.queries import QUERIES
 
     out = {}
     for k in keys:
         if settle:
             settle_jvm(spark)
-        # same forcing as bench.py: noop write = full executor-side
-        # pipeline, nothing collected to the driver
-        out[k] = timed_min(
-            lambda: QUERIES[k](spark, sf_dir).write.format("noop")
-            .mode("overwrite").save())
+        out[k] = timed_min(lambda: force(QUERIES[k](spark, sf_dir)))
     return out
 
 

@@ -385,40 +385,6 @@ def test_release_frees_only_the_target_checkpoint(spark):
     assert jsc.getPersistentRDDs().size() == base
 
 
-def test_materialized_durable_policy_selects_by_size(
-        spark, tmp_path, monkeypatch):
-    """r14 (VERDICT r13 #8): with SPARK_GRAFT_DURABLE_DIR set, frames
-    at/above SPARK_GRAFT_DURABLE_MIN_BYTES take the parquet
-    round-trip arm; frames below it (and any frame when the dir is
-    unset) keep the localCheckpoint arm. Rows identical either way."""
-    from mini_sql_engine_spark.plans import materialized, new_generation
-
-    jsc = spark.sparkContext._jsc.sc()
-    new_generation()
-    base = jsc.getPersistentRDDs().size()
-    df = spark.range(1000).selectExpr("id", "id * 2 AS v")
-
-    # durable arm: floor 0 → every frame round-trips through parquet
-    monkeypatch.setenv("SPARK_GRAFT_DURABLE_DIR", str(tmp_path))
-    monkeypatch.setenv("SPARK_GRAFT_DURABLE_MIN_BYTES", "0")
-    d = materialized(df)
-    assert [r.v for r in d.orderBy("id").collect()] == [
-        2 * i for i in range(1000)]
-    assert any(p.name.startswith("ck_") for p in tmp_path.iterdir()), (
-        "durable arm did not write under SPARK_GRAFT_DURABLE_DIR")
-    assert jsc.getPersistentRDDs().size() == base, (
-        "durable arm must not pin checkpoint blocks")
-
-    # local arm: floor far above the frame's size estimate
-    monkeypatch.setenv("SPARK_GRAFT_DURABLE_MIN_BYTES", str(1 << 60))
-    loc = materialized(df)
-    assert jsc.getPersistentRDDs().size() == base + 1, (
-        "below-floor frame should localCheckpoint")
-    assert loc.count() == 1000
-    new_generation()
-    assert jsc.getPersistentRDDs().size() == base
-
-
 def test_cc_loop_releases_per_round_state(spark):
     """r14 opt pin: connected_components frees the symmetric edge set
     and every superseded round's label checkpoint — only the returned

@@ -1,79 +1,19 @@
-"""Round-10 verification surface (VERDICT r9): the large-star/
-small-star CC candidate must produce the EXACT labeling of the
-shipped min-label propagation (same clusters, different iteration
-schedule), the `quantile_normalize_approx` at-scale swap needs its
-tolerance certificate against the exact key, the oracle cap
-constants must stay single-sourced (r9 #8), and the stream staging
-dir must track source mtime/size (ADVICE r9)."""
+"""Round-10 verification surface (VERDICT r9): the
+`quantile_normalize_approx` at-scale swap needs its tolerance
+certificate against the exact key, the oracle cap constants must stay
+single-sourced (r9 #8), and the stream staging dir must track source
+mtime/size (ADVICE r9)."""
 
 from __future__ import annotations
 
 import os
 import re
 
-import pytest
 from pyspark.sql import functions as F
 
 from mini_sql_engine_spark import queries as Q
-from mini_sql_engine_spark.catalog import Catalog
-from mini_sql_engine_spark.pipeline import dedup as DD
-from mini_sql_engine_spark.pipeline import graph as GR
 
-from tests.conftest import SF_CORRECTNESS, SF_SMOKE
-
-
-# ──────────────── large-star / small-star candidate ────────────────
-
-
-def _labels(df):
-    return {r["node"]: r["component"] for r in df.collect()}
-
-
-@pytest.mark.parametrize("edges", [
-    [(1, 2), (2, 3), (3, 4), (10, 11), (21, 20), (22, 21), (20, 22)],
-    [(5, 5), (6, 7), (7, 6), (6, 7)],
-    [(i, i + 1) for i in range(25)],            # adversarial chain
-    [(0, k) for k in range(1, 20)],             # star already
-    [(2 * k, 2 * k + 1) for k in range(12)],    # many 2-cliques
-])
-def test_star_cc_matches_min_label(spark, edges):
-    df = spark.createDataFrame(edges, ["doc_a", "doc_b"])
-    expect = _labels(GR.connected_components(df))
-    got = _labels(GR.connected_components_star(df))
-    assert got == expect
-
-
-def test_star_cc_matches_on_real_pair_graph(spark):
-    """The faceoff's correctness premise, pinned in CI: on the actual
-    dedup_cc pair graph (3-gram Jaccard, threshold 0.6) both
-    algorithms emit the identical (node, component) set."""
-    docs = Catalog(spark, SF_SMOKE).table("documents")
-    pairs = DD.ngram_jaccard_pairs_capped(
-        docs, n=3, threshold=0.6).select("doc_a", "doc_b")
-    expect = _labels(GR.connected_components(pairs))
-    got = _labels(GR.connected_components_star(pairs))
-    assert expect  # non-degenerate corpus: the graph has edges
-    assert got == expect
-
-
-def test_star_cc_rounds_instrumented(spark):
-    """LAST_ROUNDS is the per-decade O(log d) evidence channel
-    (cc_faceoff logs it into BENCH_SCALE100.json): both algorithms
-    must record their convergence round count, and a 25-node chain
-    must close within a logarithmic budget for both."""
-    chain = [(i, i + 1) for i in range(24)]
-    df = spark.createDataFrame(chain, ["doc_a", "doc_b"])
-    GR.connected_components(df)
-    GR.connected_components_star(df)
-    assert 1 <= GR.LAST_ROUNDS["min_label"] <= 8
-    assert 1 <= GR.LAST_ROUNDS["star"] <= 10
-
-
-def test_star_cc_raises_instead_of_partial_labels(spark):
-    df = spark.createDataFrame([(i, i + 1) for i in range(24)],
-                               ["doc_a", "doc_b"])
-    with pytest.raises(RuntimeError, match="no convergence"):
-        GR.connected_components_star(df, max_rounds=1)
+from tests.conftest import SF_CORRECTNESS
 
 
 # ──────────────── quantile_normalize approx certificate ────────────────

@@ -43,6 +43,26 @@ def test_pagerank_matches_numpy_power_iteration(spark):
     assert 0.5 < sum(got.values()) <= 1.0 + 1e-9
 
 
+def test_pagerank_loop_checkpoints_released_on_new_generation(spark):
+    """Every per-round rank checkpoint is tracked, so the next build's
+    generation boundary frees all of them. Compared by RDD id: Spark's
+    persisted-RDD map holds weak references, so its size also drops
+    whenever the JVM collects an earlier test's frames."""
+    from mini_sql_engine_spark.plans import new_generation
+
+    def persisted():
+        return set(spark.sparkContext._jsc.getPersistentRDDs().keys())
+
+    new_generation()
+    base = persisted()
+    ranks = Q.QUERIES["pagerank_iter"](spark, SF_SMOKE)
+    ranks.write.format("noop").mode("overwrite").save()
+    created = persisted() - base
+    assert created  # the returned frame keeps its last round alive
+    new_generation()
+    assert not persisted() & created
+
+
 def test_knn_label_every_query_gets_exactly_one_prediction(spark):
     out = Q.knn_label(spark, SF_SMOKE).collect()
     emb = Catalog(spark, SF_SMOKE).table("embeddings")
