@@ -7,15 +7,19 @@ one ``StructType`` per table (schemas profiled from the driver's
 parquet test data — FIXTURES.md §B), registered as Spark temp views.
 
 Scale notes:
-- Each table's parquet schema is inferred once per file version
-  (path, mtime, size) per process and checked against
-  ``TABLE_SCHEMAS``; later reads pass the inferred schema back to
-  the reader, so a query build launches no footer-inference job. The
-  declared schema is not used for reading: it cannot read a
-  ``TIMESTAMP(NANOS)`` column under ``nanosAsLong``, and a renamed
-  column would come back as NULLs instead of failing. The version
-  comes from driver-local ``os.stat``, so ``sf_dir`` must be a
-  filesystem the driver mounts.
+- Each table is resolved once per session and file version (path,
+  mtime, size): the first read infers the parquet schema, checks it
+  against ``TABLE_SCHEMAS`` and converts nanosecond timestamps; later
+  builds in the same session get that same (immutable, lazy)
+  DataFrame back, so they launch no footer-inference job and pay no
+  relation resolution or file listing. The declared schema is not
+  used for reading: it cannot read a ``TIMESTAMP(NANOS)`` column
+  under ``nanosAsLong``, and a renamed column would come back as
+  NULLs instead of failing. The version comes from driver-local
+  ``os.stat``, so ``sf_dir`` must be a filesystem the driver mounts.
+  A frame derived from a table plans afresh under the session's
+  current confs; an action on the bare table frame itself reuses the
+  physical plan of that frame's first action.
 - ``BROADCAST_TABLES`` marks dimension tables that are safely below
   any sane broadcast threshold at *any* scale factor (region/nation
   are fixed-size; supplier/part grow sublinearly). Join helpers use
@@ -134,11 +138,13 @@ TABLES = tuple(TABLE_SCHEMAS)
 # Dimension tables small enough to broadcast at any scale factor.
 BROADCAST_TABLES = frozenset({"region", "nation", "supplier"})
 
-# (abs path, st_mtime_ns, st_size) -> the schema Spark inferred for that
-# file version, already checked by _validate_schema. Process-wide because
-# every query build makes a fresh Catalog; a rewritten file is a new key,
-# and two threads missing the same key both store the same schema.
-_INFERRED: dict[tuple[str, int, int], T.StructType] = {}
+# abs path -> ((st_mtime_ns, st_size), session, resolved frame): the frame
+# already passed _validate_schema and _coerce_nanos. Process-wide because
+# every query build makes a fresh Catalog. A frame is only handed back for
+# the same file version and the session that read it; a rewritten file
+# replaces its path's entry, so no old version's frame stays alive; two
+# threads missing the same entry each store an equivalent frame.
+_RESOLVED: dict[str, tuple[tuple[int, int], SparkSession, DataFrame]] = {}
 
 EMBEDDING_DIM = 64
 
@@ -155,7 +161,6 @@ class Catalog:
     def __init__(self, spark: SparkSession, sf_dir: str = DEFAULT_SF_DIR):
         self.spark = spark
         self.sf_dir = sf_dir
-        self._cache: dict[str, DataFrame] = {}
         # Defensive session confs: the contract must work under a
         # caller-provided vanilla session, not only session.get_spark().
         # nanosAsLong: events.parquet carries TIMESTAMP(NANOS), which
@@ -171,20 +176,19 @@ class Catalog:
         return os.path.join(self.sf_dir, f"{name}.parquet")
 
     def table(self, name: str) -> DataFrame:
-        """Load one table (cached DataFrame; lazy — no data read yet)."""
-        if name not in self._cache:
-            path = self.path(name)
-            st = os.stat(path)
-            version = (os.path.abspath(path), st.st_mtime_ns, st.st_size)
-            schema = _INFERRED.get(version)
-            if schema is None:
-                df = self.spark.read.parquet(path)
-                _validate_schema(name, df.schema)
-                _INFERRED[version] = df.schema
-            else:
-                df = self.spark.read.schema(schema).parquet(path)
-            self._cache[name] = _coerce_nanos(df)
-        return self._cache[name]
+        """Load one table (lazy — no data read yet). The same session
+        gets the same DataFrame back while the file is unchanged."""
+        path = os.path.abspath(self.path(name))
+        st = os.stat(path)
+        version = (st.st_mtime_ns, st.st_size)
+        hit = _RESOLVED.get(path)
+        if hit is not None and hit[0] == version and hit[1] is self.spark:
+            return hit[2]
+        df = self.spark.read.parquet(path)
+        _validate_schema(name, df.schema)
+        df = _coerce_nanos(df)
+        _RESOLVED[path] = (version, self.spark, df)
+        return df
 
     def register_all(self) -> None:
         """Register every table as a temp view for the SQL front door."""

@@ -121,15 +121,16 @@ def spread(df: DataFrame) -> DataFrame:
     that it inserts one round-robin exchange whose cost is
     proportional to the (small, by construction) input.
 
-    The check reads the PLANNED partitioning (driver-side only — no
-    job runs); the target is ``sparkContext.defaultParallelism``, so
-    the decision scales with the session rather than hard-coding any
-    local core count.
+    The check reads the PLANNED partitioning on the JVM side (no job
+    runs, and no Python RDD is built just to count its partitions);
+    the target is ``sparkContext.defaultParallelism``, so the decision
+    scales with the session rather than hard-coding any local core
+    count.
     """
     sc = df.sparkSession.sparkContext
     target = sc.defaultParallelism
     try:
-        current = df.rdd.getNumPartitions()
+        current = df._jdf.queryExecution().toRdd().getNumPartitions()
     except Exception:  # non-queryable plan (e.g. streaming) — leave it
         return df
     if current >= target:

@@ -65,6 +65,11 @@ def get_spark(
     ``local[*]``. ``spark.sql.shuffle.partitions`` defaults to 32 —
     sized to local cores; on a real cluster this should be ~2-3× total
     executor cores (or left to AQE coalescing, which is enabled).
+
+    The generated-class cache holds 1000 classes, so a session that
+    cycles through many different queries compiles each class once,
+    not once per cycle. The cache is JVM-wide and takes its size from
+    the session that first generates code in the process.
     """
     cpus = cpus or os.environ.get("SPARK_GRAFT_CPUS") or "*"
     shuffle_partitions = shuffle_partitions or DEFAULT_SHUFFLE_PARTITIONS
@@ -90,6 +95,13 @@ def get_spark(
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.sql.autoBroadcastJoinThreshold", str(32 * 1024 * 1024))
+        # The generated-class cache is a segmented LRU (4 segments of
+        # maxEntries / 4 each), so at the default of 100 it evicts well
+        # before it holds 100 classes: a mixed pass of the 15 sql_adhoc
+        # benchmark keys at sf0.01 (98 distinct classes) recompiled
+        # 24-34 of them on every repeat, at 6-9 ms each (4 vCPUs). At
+        # 1000 a repeat compiles none.
+        .config("spark.sql.codegen.cache.maxEntries", "1000")
         # events.parquet carries TIMESTAMP(NANOS) which the vectorized
         # reader rejects; read as raw nanos and convert in the catalog
         # (truncation to µs — matches DuckDB's ns→µs behavior).

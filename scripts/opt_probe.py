@@ -3,7 +3,11 @@
 
 For each Qkey named on the command line:
   * time the noop-sink execution min-of-N on one warm session
-    (bench.py methodology, labelled via setJobDescription), and
+    (bench.py methodology, labelled via setJobDescription),
+  * count the Janino compiles those runs made and the milliseconds
+    they took (``CodegenMetrics.METRIC_COMPILATION_TIME`` and
+    ``CodeGenerator.compileTime``, read over py4j; keys probed earlier
+    in the same session leave their classes cached), and
   * write ``df.explain('formatted')`` to plans/<dir>/<key>_<tag>.txt
     (default plans/r14).
 
@@ -49,7 +53,14 @@ def main() -> None:
     # warm up JVM / codegen / parquet footers
     force(QUERIES["group_agg"](spark, args.sf_dir))
 
+    jvm = spark.sparkContext._jvm
+    compiles = jvm.org.apache.spark.metrics.source.CodegenMetrics \
+        .METRIC_COMPILATION_TIME()
+    codegen = jvm.org.apache.spark.sql.catalyst.expressions.codegen \
+        .CodeGenerator
+
     out: dict[str, float] = {}
+    janino: dict[str, dict[str, float]] = {}
     for key in args.keys:
         fn = QUERIES[key]
         if not args.no_plan:
@@ -60,10 +71,16 @@ def main() -> None:
                       "w") as fh:
                 fh.write(plan)
         spark.sparkContext.setJobDescription(f"probe:{key}")
+        n0, ns0 = compiles.getCount(), codegen.compileTime()
         out[key] = timed_min(lambda: force(fn(spark, args.sf_dir)),
                              base_reps=args.reps, fast_reps=args.reps)
-        print(json.dumps({key: out[key]}), flush=True)
-    print(json.dumps({"tag": args.tag, "timings": out}), flush=True)
+        janino[key] = {
+            "compiles": compiles.getCount() - n0,
+            "compile_ms": round((codegen.compileTime() - ns0) / 1e6, 1),
+        }
+        print(json.dumps({key: out[key], **janino[key]}), flush=True)
+    print(json.dumps({"tag": args.tag, "timings": out, "janino": janino}),
+          flush=True)
 
 
 if __name__ == "__main__":

@@ -1,6 +1,6 @@
-"""Catalog reads: the schema drift check, and the per-file-version cache
-of the inferred parquet schema that keeps query builds free of
-footer-inference jobs."""
+"""Catalog reads: the schema drift check, and the per-session,
+per-file-version cache of resolved table frames that keeps query
+builds free of footer-inference jobs and relation resolution."""
 
 from __future__ import annotations
 
@@ -62,6 +62,25 @@ def test_unchanged_file_is_read_without_spark_jobs(spark, tmp_path):
     df = Catalog(spark, str(tmp_path)).table("region")
     assert df.columns == ["r_regionkey", "r_name"]
     assert sorted(r.r_name for r in df.collect()) == ["AFRICA", "AMERICA", "ASIA"]
+
+
+def test_unchanged_file_gives_one_session_the_same_frame(spark, tmp_path):
+    _write_region(tmp_path)
+    first = Catalog(spark, str(tmp_path)).table("region")
+    assert Catalog(spark, str(tmp_path)).table("region") is first
+
+
+def test_other_session_gets_a_frame_of_its_own(spark, tmp_path):
+    _write_region(tmp_path)
+    ours = Catalog(spark, str(tmp_path)).table("region")
+    other = spark.newSession()
+    theirs = Catalog(other, str(tmp_path)).table("region")
+    assert theirs.sparkSession is other
+    assert theirs.count() == 3
+    # the other session's read replaced the entry; ours is read again
+    again = Catalog(spark, str(tmp_path)).table("region")
+    assert again.sparkSession is spark
+    assert again is not ours and again.count() == 3
 
 
 def test_nanosecond_timestamps_read_as_truncated_timestamp_ntz(spark, tmp_path):

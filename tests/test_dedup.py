@@ -350,20 +350,30 @@ def test_simhash_md5_chunks_plan_is_packed(spark):
         "per-digit ascii decode is back in the row path")
 
 
+def _persisted(spark) -> set[int]:
+    """Ids of the RDDs the session holds persisted. Compared as id sets,
+    not counts: Spark's persisted-RDD map holds weak references, so its
+    size also drops whenever the JVM collects an earlier test's frames."""
+    return set(spark.sparkContext._jsc.getPersistentRDDs().keys())
+
+
+def _checkpoint_id(df) -> int:
+    return df._jdf.queryExecution().analyzed().rdd().id()
+
+
 def test_materialized_checkpoints_released_on_new_generation(spark):
     """r14 opt pin (VERDICT r13 #2): localCheckpoint blocks from one
     query generation are unpersisted when the next generation starts,
     and a frame checkpointed in the CURRENT generation stays usable."""
     from mini_sql_engine_spark.plans import materialized, new_generation
 
-    jsc = spark.sparkContext._jsc.sc()
     new_generation()  # flush anything earlier tests left behind
-    base = jsc.getPersistentRDDs().size()
+    base = _persisted(spark)
     ck = materialized(spark.range(100).selectExpr("id", "id * 2 AS v"))
-    assert jsc.getPersistentRDDs().size() == base + 1
+    assert _persisted(spark) - base == {_checkpoint_id(ck)}
     assert ck.count() == 100  # usable within its generation
     new_generation()
-    assert jsc.getPersistentRDDs().size() == base
+    assert _checkpoint_id(ck) not in _persisted(spark)
 
 
 def test_release_frees_only_the_target_checkpoint(spark):
@@ -372,17 +382,17 @@ def test_release_frees_only_the_target_checkpoint(spark):
     from mini_sql_engine_spark.plans import (
         materialized, new_generation, release)
 
-    jsc = spark.sparkContext._jsc.sc()
     new_generation()
-    base = jsc.getPersistentRDDs().size()
+    base = _persisted(spark)
     a = materialized(spark.range(50).selectExpr("id"))
     b = materialized(spark.range(60).selectExpr("id"))
-    assert jsc.getPersistentRDDs().size() == base + 2
+    a_id, b_id = _checkpoint_id(a), _checkpoint_id(b)
+    assert _persisted(spark) - base == {a_id, b_id}
     release(a)
-    assert jsc.getPersistentRDDs().size() == base + 1
+    assert _persisted(spark) - base == {b_id}
     assert b.count() == 60  # sibling unharmed
     new_generation()
-    assert jsc.getPersistentRDDs().size() == base
+    assert not _persisted(spark) & {a_id, b_id}
 
 
 def test_cc_loop_releases_per_round_state(spark):
@@ -392,8 +402,7 @@ def test_cc_loop_releases_per_round_state(spark):
     from mini_sql_engine_spark.plans import new_generation
 
     new_generation()
-    jsc = spark.sparkContext._jsc.sc()
-    base = jsc.getPersistentRDDs().size()
+    base = _persisted(spark)
     pairs = spark.createDataFrame(
         [(1, 2), (2, 3), (3, 4), (10, 11), (20, 21), (21, 22)],
         "doc_a long, doc_b long")
@@ -401,7 +410,8 @@ def test_cc_loop_releases_per_round_state(spark):
     got = {(r.doc_id, r.cluster_rep) for r in labels.collect()}
     assert got == {(1, 1), (2, 1), (3, 1), (4, 1), (10, 10), (11, 10),
                    (20, 20), (21, 20), (22, 20)}
-    assert jsc.getPersistentRDDs().size() == base + 1, (
+    live = _persisted(spark) - base
+    assert len(live) == 1, (
         "CC loop must keep only the final label checkpoint live")
     new_generation()
-    assert jsc.getPersistentRDDs().size() == base
+    assert not _persisted(spark) & live
