@@ -98,23 +98,13 @@ def term_counts(docs: DataFrame) -> DataFrame:
     Scale note: the vocabulary is the group key; partial (map-side)
     aggregation collapses each task's counts before the shuffle, so a
     skewed term ("the") costs one partial row per task, not a hot
-    reducer. This is the TF half of TF-IDF; the DF half is
-    ``doc_freq`` below.
+    reducer. This is the TF half of TF-IDF; ``tf_idf`` below
+    computes the DF half.
     """
     return (
         docs.select(F.explode(tokens("text")).alias("term"))
         .groupBy("term")
         .agg(F.count(F.lit(1)).alias("term_count"))
-    )
-
-
-def doc_freq(docs: DataFrame) -> DataFrame:
-    """Document frequency per term (distinct doc, term) — IDF input."""
-    return (
-        docs.select("doc_id", F.explode(tokens("text")).alias("term"))
-        .distinct()
-        .groupBy("term")
-        .agg(F.count(F.lit(1)).alias("doc_count"))
     )
 
 

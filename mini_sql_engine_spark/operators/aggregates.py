@@ -40,19 +40,6 @@ def exact_sum(col: str | Column, alias: str) -> Column:
     return F.sum(money(col)).cast("double").alias(alias)
 
 
-def scalar_aggs(df: DataFrame, col: str) -> DataFrame:
-    """The reference's whole-table aggregate set over one column:
-    MAX, MIN, SUM, AVG, COUNT (+ COUNT(*))."""
-    return df.agg(
-        F.max(col).alias(f"max_{col}"),
-        F.min(col).alias(f"min_{col}"),
-        F.sum(col).alias(f"sum_{col}"),
-        F.avg(col).alias(f"avg_{col}"),
-        F.count(col).alias(f"count_{col}"),
-        F.count(F.lit(1)).alias("count_star"),
-    )
-
-
 def distinct_rows(df: DataFrame, cols: list[str] | None = None) -> DataFrame:
     """``SELECT DISTINCT col1, col2`` — hash aggregate on the tuple."""
     return (df.select(*cols) if cols else df).distinct()
@@ -61,12 +48,6 @@ def distinct_rows(df: DataFrame, cols: list[str] | None = None) -> DataFrame:
 def count_distinct(df: DataFrame, col: str, alias: str) -> DataFrame:
     """Exact COUNT(DISTINCT col) (expand-then-agg under the hood)."""
     return df.agg(F.countDistinct(col).alias(alias))
-
-
-def approx_count_distinct(df: DataFrame, col: str, alias: str, rsd: float = 0.01) -> DataFrame:
-    """HyperLogLog++ cardinality — the 100 TB path: one pass, tiny
-    sketch per partition, no expansion shuffle. Capability extension."""
-    return df.agg(F.approx_count_distinct(col, rsd).alias(alias))
 
 
 def group_agg(df: DataFrame, keys: list[str], *aggs: Column) -> DataFrame:

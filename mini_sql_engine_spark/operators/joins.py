@@ -1,4 +1,4 @@
-"""Joins: cross, equi, multi-way, theta, outer/semi/anti.
+"""Joins: cross, equi, outer/semi/anti.
 
 Reference behavior (SURVEY.md §2.3, [SPEC-HIGH]): every multi-table
 query is a nested-loop cartesian product materialized in memory, with
@@ -15,8 +15,6 @@ cartesian+filter, but executes it as a hash join.
 Scale notes:
 - ``equi_join(..., broadcast_right=True)`` pins the small side as a
   broadcast so a 100 TB fact ⋈ small dim never shuffles the fact.
-- ``theta_join`` (pure inequality) is a BroadcastNestedLoopJoin —
-  only sane when one side is broadcastable; the helper asserts a hint.
 - cross joins are guarded by an explicit opt-in: an unbounded cross
   join at 100 TB is an outage, not a query.
 """
@@ -57,26 +55,6 @@ def equi_join(
     if isinstance(on, str):
         on = [on]
     return left.join(r, on, how)
-
-
-def theta_join(
-    left: DataFrame,
-    right: DataFrame,
-    condition: Column,
-    how: str = "inner",
-    *,
-    broadcast_right: bool = True,
-) -> DataFrame:
-    """Join on an arbitrary (non-equi) condition, e.g. range predicates.
-
-    Physical plan is BroadcastNestedLoopJoin — O(|L|·|R|) compares — so
-    the right side defaults to a broadcast hint and should be a bounded
-    table. If the condition mixes an equality with inequalities, pass it
-    whole: Catalyst extracts the equi part into a hash join and keeps
-    the rest as a post-filter, which is the scalable shape.
-    """
-    r = F.broadcast(right) if broadcast_right else right
-    return left.join(r, condition, how)
 
 
 def semi_join(left: DataFrame, right: DataFrame, on: Column | list[str] | str) -> DataFrame:

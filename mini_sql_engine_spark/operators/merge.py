@@ -11,7 +11,7 @@ Scale notes: the changelog is usually ≪ the snapshot — pass
 shuffle of the snapshot at all. When both sides are large, the
 full-outer join shuffles each side once on the key — the minimum any
 MERGE can do. Snapshots stored bucketed by the merge key
-(``sources.sinks.write_bucketed``) skip even that exchange.
+(``DataFrameWriter.bucketBy``) skip even that exchange.
 """
 
 from __future__ import annotations

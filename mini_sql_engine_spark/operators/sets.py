@@ -2,18 +2,14 @@
 
 Absent in the reference (SURVEY.md §2.6, [SPEC-HIGH]) — capability
 extensions. ANSI bag/set semantics: ``union_distinct`` = UNION,
-``union_all`` = UNION ALL, ``intersect``/``except_`` are DISTINCT-set
-semantics like their SQL namesakes, with ``*_all`` bag variants.
+``intersect``/``except_`` are DISTINCT-set semantics like their SQL
+namesakes, with ``*_all`` bag variants.
 All compile to hash aggregates / shuffles on the full row tuple.
 """
 
 from __future__ import annotations
 
 from pyspark.sql import DataFrame
-
-
-def union_all(a: DataFrame, b: DataFrame) -> DataFrame:
-    return a.unionByName(b)
 
 
 def union_distinct(a: DataFrame, b: DataFrame) -> DataFrame:

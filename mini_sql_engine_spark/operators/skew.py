@@ -67,22 +67,3 @@ def salted_groupby(
         .groupBy(*keys)
         .agg(*finals)
     )
-
-
-def salted_join(
-    big: DataFrame,
-    small: DataFrame,
-    on: str,
-    n_salts: int = 16,
-    how: str = "inner",
-) -> DataFrame:
-    """Equi-join ``big ⋈ small`` on ``on``, with the big side's rows
-    spread across ``n_salts`` sub-keys. Semantics identical to
-    ``big.join(small, on, how)`` for inner/left joins."""
-    b = big.withColumn(
-        "_salt", F.pmod(F.xxhash64(F.struct(*big.columns)), F.lit(n_salts))
-    )
-    s = small.withColumn(
-        "_salt", F.explode(F.sequence(F.lit(0), F.lit(n_salts - 1)))
-    )
-    return b.join(s, [on, "_salt"], how).drop("_salt")

@@ -40,11 +40,6 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 
-def order_by(df: DataFrame, *keys: Column | str) -> DataFrame:
-    """Total sort. Multi-key superset of the reference's single key."""
-    return df.orderBy(*keys)
-
-
 def top_k(df: DataFrame, k: int, *keys: Column | str) -> DataFrame:
     """Top-k by sort keys → TakeOrderedAndProject (no full sort)."""
     return df.orderBy(*keys).limit(k)

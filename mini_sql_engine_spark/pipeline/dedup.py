@@ -163,20 +163,6 @@ def ngram_jaccard_pairs_capped(
     )
 
 
-def minhash_signatures(docs: DataFrame, n: int = 3, num_hashes: int = 32) -> DataFrame:
-    """MinHash signature per document: for seed i, sig[i] = min over
-    shingles of xxhash64(shingle, i). Built-ins only — the per-seed min
-    is an array ``transform`` + ``array_min`` over the shingle array,
-    computed entirely within the row (no shuffle, no UDF)."""
-    sh = F.array_distinct(shingles(tokens("text"), n))
-    sig = F.transform(
-        F.sequence(F.lit(0), F.lit(num_hashes - 1)),
-        lambda i: F.array_min(F.transform(sh, lambda s: F.xxhash64(s, i))),
-    )
-    return spread(docs.select("doc_id", "text")).select(
-        "doc_id", F.when(F.size(sh) > 0, sig).alias("signature"))
-
-
 def minhash_band_hashes(
     docs: DataFrame, n: int = 3, num_hashes: int = 32, bands: int = 8
 ) -> DataFrame:
@@ -364,9 +350,10 @@ def minhash_signatures_md5(
     ``"<i>:<shingle>"``, compared as a STRING — lexicographic min on
     fixed-width lowercase hex equals numeric min, so any engine
     computes the identical signature (the DuckDB twin hash-checks it).
-    The xxhash64 family in ``minhash_signatures`` stays the at-scale
-    default (cheaper per hash); this variant is the cross-engine
-    witness that the banding algebra is right.
+    The at-scale path is the xxhash64 family of ``minhash_band_hashes``
+    (cheaper per hash), which ``minhash_lsh_candidates`` bands; this
+    variant is the cross-engine witness that the banding algebra is
+    right.
 
     Long output (doc_id, seed, minhash), one row per doc per seed.
     Docs with fewer than ``n`` tokens have no shingles and are dropped

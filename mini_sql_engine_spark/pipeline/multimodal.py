@@ -145,66 +145,3 @@ def _fnv1a(payload: bytes) -> int:
         h = ((h ^ byte) * 0x100000001B3) & 0xFFFFFFFFFFFFFFFF
     # fold to signed 64-bit for Spark LongType
     return h - (1 << 64) if h >= (1 << 63) else h
-
-
-RESIZED_SCHEMA = T.StructType(
-    [
-        T.StructField("media_id", T.LongType()),
-        T.StructField("payload", T.BinaryType()),
-        T.StructField("mime", T.StringType()),
-        T.StructField("width", T.IntegerType()),
-        T.StructField("height", T.IntegerType()),
-        T.StructField("orig_width", T.IntegerType()),
-        T.StructField("orig_height", T.IntegerType()),
-    ]
-)
-
-
-def resize(
-    media: DataFrame, target_w: int, target_h: int, fake_decode: bool = False
-) -> DataFrame:
-    """Batch resize over the binary column (``mapInPandas``).
-
-    Real path: decode → nearest-neighbor resample → re-encode on the
-    Arrow batch (PNG via the stdlib codec; other formats raise until
-    an imaging library is plugged into ``decode_image``). With
-    ``fake_decode`` the payload passes through unchanged and only the
-    typed metadata is rewritten — deterministic, so downstream
-    operators can be tested end-to-end without decodable payloads."""
-
-    def repack(payload: bytes) -> bytes:
-        w, h, c, pixels = decode_image(payload)
-        return png.encode_png(
-            target_w, target_h, c,
-            png.resize_nearest(w, h, c, pixels, target_w, target_h),
-        )
-
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            out = pd.DataFrame(
-                {
-                    "media_id": pdf["media_id"],
-                    "payload": pdf["payload"]
-                    if fake_decode
-                    else pdf["payload"].map(repack),
-                    "mime": pdf["mime"]
-                    if fake_decode
-                    else "image/png",
-                    "width": target_w,
-                    "height": target_h,
-                    "orig_width": pdf["width"],
-                    "orig_height": pdf["height"],
-                }
-            )
-            out["width"] = out["width"].astype("int32")
-            out["height"] = out["height"].astype("int32")
-            yield out
-
-    return media.mapInPandas(batches, RESIZED_SCHEMA)
-
-
-def frame_sample(media: DataFrame, every_n: int = 10) -> DataFrame:
-    """Video-style frame sampling stand-in: keeps rows whose id falls on
-    the sampling grid — the real operator applies the same predicate to
-    frame indexes inside a decoded container (stubbed decode)."""
-    return media.filter(F.col("media_id") % every_n == 0)

@@ -132,21 +132,3 @@ def encode_png(width: int, height: int, channels: int, pixels: bytes) -> bytes:
 def _chunk(ctype: bytes, body: bytes) -> bytes:
     crc = zlib.crc32(ctype + body) & 0xFFFFFFFF
     return struct.pack(">I", len(body)) + ctype + body + struct.pack(">I", crc)
-
-
-def resize_nearest(
-    width: int, height: int, channels: int, pixels: bytes, new_w: int, new_h: int
-) -> bytes:
-    """Nearest-neighbor resample (the reference kernel; production
-    swaps in an area/bilinear filter with the same contract)."""
-    out = bytearray(new_w * new_h * channels)
-    for ny in range(new_h):
-        sy = ny * height // new_h
-        src_row = sy * width * channels
-        dst_row = ny * new_w * channels
-        for nx in range(new_w):
-            sx = nx * width // new_w
-            s = src_row + sx * channels
-            d = dst_row + nx * channels
-            out[d : d + channels] = pixels[s : s + channels]
-    return bytes(out)

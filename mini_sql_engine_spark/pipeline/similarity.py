@@ -397,13 +397,19 @@ def ivf_topk(
         .limit(max(n_cells, train_cap if kmeans_iters > 0 else n_cells))
         .collect()
     )
-    train = np.array([r.cvec for r in sample_rows], dtype=np.float64)
-    norms = np.linalg.norm(train, axis=1, keepdims=True)
-    train /= np.where(norms > 0, norms, 1.0)  # zero vectors stay zero
-    n_cells = min(n_cells, max(len(train), 1))  # tiny-corpus clamp
-    cent = train[:n_cells].copy()
-    if kmeans_iters > 0:
-        cent = _kmeans_refine(train, cent, kmeans_iters)
+    if not sample_rows:
+        # empty corpus: no query has a neighbor. Emptying the queries
+        # too means the cell probes never run on the placeholder.
+        queries = queries.limit(0)
+        cent = np.zeros((1, 1))
+    else:
+        train = np.array([r.cvec for r in sample_rows], dtype=np.float64)
+        norms = np.linalg.norm(train, axis=1, keepdims=True)
+        train /= np.where(norms > 0, norms, 1.0)  # zero vectors stay zero
+        n_cells = min(n_cells, len(train))  # tiny-corpus clamp
+        cent = train[:n_cells].copy()
+        if kmeans_iters > 0:
+            cent = _kmeans_refine(train, cent, kmeans_iters)
 
     c = corpus.select(
         F.col(id_col).alias("neighbor_id"), F.col(vec_col).alias("c_vec")

@@ -9,18 +9,10 @@ from mini_sql_engine_spark.plans.materialize import (
     release,
     spread,
 )
-from mini_sql_engine_spark.plans.runtime_filters import (
-    bloom_filter_nodes,
-    enable_runtime_filters,
-    restore_confs,
-)
 
 __all__ = [
     "materialized",
     "new_generation",
     "release",
     "spread",
-    "bloom_filter_nodes",
-    "enable_runtime_filters",
-    "restore_confs",
 ]

@@ -17,7 +17,9 @@ that loses an executor mid-action fails instead of recomputing.
 from __future__ import annotations
 
 import os
+import warnings
 
+from py4j.protocol import Py4JError
 from pyspark.sql import DataFrame
 
 # Live local-checkpoint block sets, as (generation, JVM-RDD handle)
@@ -34,14 +36,35 @@ from pyspark.sql import DataFrame
 _TRACKED: list = []  # [(generation, py4j RDD handle)]
 _GEN: int = 0
 
+# What a py4j call on a checkpoint handle can raise: the JVM call
+# failed or the gateway is gone (Py4JError), or the frame has no JVM
+# plan at all (AttributeError: no ``_jdf``, e.g. a Connect frame).
+_HANDLE_ERRORS = (Py4JError, AttributeError)
+_WARNED: set = set()  # sites that have already warned in this process
+
+
+def _warn_once(site: str, exc: Exception) -> None:
+    """Report a failed tracking or unpersist step once per process and
+    site: the query still runs, but the blocks involved stay on the
+    executor heap until the session ends."""
+    if site in _WARNED:
+        return
+    _WARNED.add(site)
+    warnings.warn(
+        f"plans.materialize.{site} failed ({exc!r}); the local-checkpoint "
+        "blocks involved stay cached until the session ends",
+        RuntimeWarning,
+        stacklevel=3,
+    )
+
 
 def _track(ck: DataFrame) -> None:
     try:
         # the checkpointed Dataset's logical plan is a LogicalRDD
         # wrapping the persisted RDD — the one handle unpersist needs
         _TRACKED.append((_GEN, ck._jdf.queryExecution().analyzed().rdd()))
-    except Exception:  # pragma: no cover - Connect/streaming plans
-        pass
+    except _HANDLE_ERRORS as exc:
+        _warn_once("_track", exc)
 
 
 def new_generation() -> None:
@@ -67,8 +90,8 @@ def new_generation() -> None:
         if gen < cur:
             try:
                 jrdd.unpersist(False)
-            except Exception:  # pragma: no cover - session already gone
-                pass
+            except _HANDLE_ERRORS as exc:
+                _warn_once("new_generation", exc)
         else:  # pragma: no cover - same-generation entries stay
             keep.append((gen, jrdd))
     _TRACKED[:] = keep
@@ -81,7 +104,7 @@ def release(df: DataFrame) -> None:
     round-N state is dead once round N+1 has materialized."""
     try:
         target = df._jdf.queryExecution().analyzed().rdd()
-    except Exception:  # pragma: no cover - not a checkpointed frame
+    except _HANDLE_ERRORS:  # not a checkpointed frame: nothing to free
         return
     tid = target.id()
     keep = []
@@ -89,8 +112,8 @@ def release(df: DataFrame) -> None:
         if jrdd.id() == tid:
             try:
                 jrdd.unpersist(False)
-            except Exception:  # pragma: no cover
-                pass
+            except _HANDLE_ERRORS as exc:
+                _warn_once("release", exc)
         else:
             keep.append((gen, jrdd))
     _TRACKED[:] = keep

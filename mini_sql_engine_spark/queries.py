@@ -928,8 +928,8 @@ def win_running_sum(spark, sf_dir):
 def user_ewma(spark, sf_dir):
     """Per-user final EWMA via the telescoped pure-expression form —
     one shuffle, zero Python, unbounded histories (far-past weights
-    underflow benignly). Rows-only (pandas oracle + three-way parity
-    vs the segmented scan and the sequential recurrence in tests)."""
+    underflow benignly). Rows-only (pandas ``ewm`` oracle in
+    tests/test_streaming.py)."""
     return EW.user_ewma_expr(Catalog(spark, sf_dir).table("events"))
 
 
@@ -3451,6 +3451,8 @@ def pagerank_iter(spark, sf_dir):
     tests/test_round8_ops.py pins the values."""
     d = Catalog(spark, sf_dir).table("documents").select("doc_id")
     n_docs = d.count()  # scalar cardinality for the teleport term
+    if n_docs == 0:  # no page, no rank (and no 1/N teleport term)
+        return d.select("doc_id", F.lit(None).cast("double").alias("rank"))
     edges = d.select(
         F.col("doc_id").alias("src"),
         F.explode(F.array(
@@ -6904,8 +6906,8 @@ def stream_tumbling(spark, sf_dir):
     stream must reproduce the batch result bit-for-bit — the
     batch/stream unification contract (§2.9) as a driver-checkable
     hash rather than a pytest-only claim. At scale the memory sink
-    swaps for parquet/foreachBatch (streaming/jobs.py sinks);
-    watermark state stays bounded per (window, event_type)."""
+    swaps for a durable (parquet or foreachBatch) sink; watermark
+    state stays bounded per (window, event_type)."""
     from mini_sql_engine_spark.streaming import jobs as SJ
 
     Catalog(spark, sf_dir)  # registers the ns-timestamp parquet confs

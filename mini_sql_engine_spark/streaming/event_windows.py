@@ -56,35 +56,6 @@ def sliding_counts(
     )
 
 
-def user_ewma(events: DataFrame, alpha: float = 0.3) -> DataFrame:
-    """Per-user exponentially-weighted moving average of event values —
-    the ``applyInPandas`` tier of the custom-operator ladder: an
-    order-dependent recurrence no built-in aggregate expresses
-    (window frames can't carry multiplicative state). Each user's
-    events arrive as one Arrow batch, the recurrence runs vectorized
-    in pandas, output is the final EWMA per user.
-
-    Scale note: state is one group per task after the groupBy shuffle;
-    a single user's history must fit a worker's batch. For unbounded
-    per-key histories use ``user_ewma_segmented`` — the segmented-scan
-    formulation with O(chunk) task memory.
-    """
-    import pandas as pd
-
-    def ewma(pdf: pd.DataFrame) -> pd.DataFrame:
-        pdf = pdf.sort_values(["ts", "event_id"])
-        val = pdf["value"].ewm(alpha=alpha, adjust=False).mean().iloc[-1]
-        return pd.DataFrame(
-            {"user_id": [pdf["user_id"].iloc[0]],
-             "n_events": [len(pdf)],
-             "ewma_value": [round(float(val), 6)]}
-        )
-
-    return events.select("user_id", "ts", "event_id", "value").groupBy(
-        "user_id"
-    ).applyInPandas(ewma, "user_id long, n_events long, ewma_value double")
-
-
 def user_ewma_expr(events: DataFrame, alpha: float = 0.3) -> DataFrame:
     """Per-user FINAL EWMA as pure JVM expressions — no Python at all.
 
@@ -98,10 +69,9 @@ def user_ewma_expr(events: DataFrame, alpha: float = 0.3) -> DataFrame:
     aggregate over the SAME partitioning, so Catalyst reuses the
     exchange — one shuffle total, whole-stage codegen throughout.
 
-    This is the plan for final-value semantics; ``user_ewma_segmented``
-    is the general machinery (per-row outputs, recurrences whose
-    coefficients vary per step). Results agree to float tolerance
-    (pow vs repeated multiplication re-associates; asserted in tests).
+    Results agree with the sequential recurrence to float tolerance
+    (pow vs repeated multiplication re-associates; asserted in tests
+    against a pandas ``ewm`` oracle).
     """
     w = Window.partitionBy("user_id").orderBy("ts", "event_id")
     decay = F.lit(1.0 - alpha)
@@ -119,78 +89,6 @@ def user_ewma_expr(events: DataFrame, alpha: float = 0.3) -> DataFrame:
         .agg(F.count(F.lit(1)).alias("n_events"),
              F.round(F.sum(term), 6).alias("ewma_value"))
         .select("user_id", "n_events", "ewma_value")
-    )
-
-
-def user_ewma_segmented(
-    events: DataFrame, alpha: float = 0.3, chunk: int = 1024
-) -> DataFrame:
-    """Per-user EWMA as a SEGMENTED SCAN — removes ``user_ewma``'s
-    one-batch-per-user limit, the classic way linear recurrences
-    distribute (Blelloch prefix-scan composition of affine maps):
-
-    EWMA is affine in its carry state: over a chunk of n values with
-    incoming state s, the outgoing state is ``local + s·(1−α)ⁿ`` where
-    ``local`` is the chunk's EWMA from zero state. So:
-
-    1. per-user positions (one keyed window — same shuffle any per-key
-       op needs) assign each event to a chunk of ≤ ``chunk`` rows;
-    2. each (user, chunk) group reduces to an affine map
-       ``(local, decay)`` — task memory is O(chunk) REGARDLESS of how
-       long a user's history is;
-    3. each user folds its ~n/chunk affine maps in chunk order —
-       a second grouped pass over summaries ``chunk×`` smaller than
-       the input (recurse again if even that overflows; one level
-       covers 10⁶-event users at chunk=1024 with 10³-row folds).
-
-    The first chunk runs the plain recurrence (pandas' adjust=False
-    convention: y₀ = x₀); later chunks compute their zero-state local
-    by prepending a literal zero, which makes the fold bit-compatible
-    with the sequential recurrence up to float associativity (one
-    product+add per chunk boundary).
-    """
-    import pandas as pd
-
-    w = Window.partitionBy("user_id").orderBy("ts", "event_id")
-    chunked = (
-        events.select("user_id", "ts", "event_id", "value")
-        .withColumn("_chunk", ((F.row_number().over(w) - 1) / chunk)
-                    .cast("long"))
-    )
-
-    def summarize(pdf: pd.DataFrame) -> pd.DataFrame:
-        pdf = pdf.sort_values(["ts", "event_id"])
-        vals = pdf["value"]
-        if pdf["_chunk"].iloc[0] == 0:
-            local = vals.ewm(alpha=alpha, adjust=False).mean().iloc[-1]
-        else:
-            zero_led = pd.concat([pd.Series([0.0]), vals], ignore_index=True)
-            local = zero_led.ewm(alpha=alpha, adjust=False).mean().iloc[-1]
-        return pd.DataFrame({
-            "user_id": [pdf["user_id"].iloc[0]],
-            "_chunk": [pdf["_chunk"].iloc[0]],
-            "n": [len(pdf)],
-            "local": [float(local)],
-            "decay": [float((1.0 - alpha) ** len(pdf))],
-        })
-
-    summaries = chunked.groupBy("user_id", "_chunk").applyInPandas(
-        summarize, "user_id long, _chunk long, n long, local double, decay double"
-    )
-
-    def fold(pdf: pd.DataFrame) -> pd.DataFrame:
-        pdf = pdf.sort_values("_chunk")
-        s = 0.0
-        for local, decay in zip(pdf["local"], pdf["decay"]):
-            s = local + decay * s
-        return pd.DataFrame({
-            "user_id": [pdf["user_id"].iloc[0]],
-            "n_events": [int(pdf["n"].sum())],
-            "ewma_value": [round(s, 6)],
-        })
-
-    return summaries.groupBy("user_id").applyInPandas(
-        fold, "user_id long, n_events long, ewma_value double"
     )
 
 

@@ -66,204 +66,6 @@ def streaming_session_counts(
     )
 
 
-def streaming_enriched_counts(
-    events: DataFrame,
-    user_dim: DataFrame,
-    duration: str = "1 day",
-    watermark: str = "1 hour",
-) -> DataFrame:
-    """Stream–static enrichment (the feature-lookup shape): each
-    micro-batch joins the stream against a STATIC dimension — no
-    state, no watermark interplay; Spark re-plans the static side per
-    batch, and with the broadcast hint the join is a map-side hash
-    probe (the dimension never shuffles the stream). The canonical
-    production pattern for attaching user/feature attributes before a
-    windowed aggregation.
-
-    ``user_dim``: static (user_id, segment) — e.g. a feature-store
-    snapshot. Left join: events with unknown users keep flowing with a
-    NULL segment rather than being dropped.
-    """
-    enriched = events.withWatermark("ts", watermark).join(
-        F.broadcast(user_dim), "user_id", "left"
-    )
-    return (
-        enriched.groupBy(F.window("ts", duration).alias("w"), "segment")
-        .agg(F.count(F.lit(1)).alias("n_events"),
-             event_windows.exact_value_sum())
-        .select(
-            event_windows._fmt(F.col("w.start")).alias("win_start"),
-            "segment", "n_events", "sum_value",
-        )
-    )
-
-
-def user_segment_dim(events_batch: DataFrame) -> DataFrame:
-    """Static user dimension derived from history: activity-tier
-    segment per user (the kind of snapshot a feature store serves).
-    Deterministic: tiers from exact event counts."""
-    return (
-        events_batch.groupBy("user_id")
-        .agg(F.count(F.lit(1)).alias("_n"))
-        .select(
-            "user_id",
-            F.when(F.col("_n") >= 20, "heavy")
-            .when(F.col("_n") >= 5, "regular")
-            .otherwise("light").alias("segment"),
-        )
-    )
-
-
-def streaming_interval_join(
-    clicks: DataFrame,
-    views: DataFrame,
-    watermark: str = "2 hours",
-    within: str = "30 minutes",
-    how: str = "inner",
-) -> DataFrame:
-    """Stream-stream join: pair each click with the same user's views
-    within ±``within`` of it. ``how='left'`` adds outer semantics:
-    a click with no view in its interval is emitted with nulls — but
-    only once the watermark proves no matching view can still arrive
-    (outer results trail the data by watermark + interval; an inner
-    match emits as soon as both rows are buffered).
-
-    Operational gotcha (pinned in tests): the join's GLOBAL watermark
-    is the MIN over both inputs' watermarks. If one branch of the
-    pipeline goes quiet (e.g. views stop flowing), the watermark
-    stalls, outer results stop emitting, and state grows on both
-    sides — monitor per-source event-time lag, not just the sink.
-
-    Both inputs carry watermarks and the join condition bounds event
-    time on both sides — that pair is what lets Spark compute a state
-    retention horizon (watermark + interval) and EVICT buffered rows,
-    so state is O(rows in the time window), not O(stream). Without the
-    time-range condition a stream-stream join must buffer one side
-    forever; at 100 TB/day that is the difference between a runnable
-    job and an OOM. Works identically on batch DataFrames (minus the
-    watermark bound), which is how the test establishes the oracle.
-    """
-    c, v = clicks.alias("c"), views.alias("v")
-    if clicks.isStreaming:
-        c = c.withWatermark("ts", watermark)
-        v = v.withWatermark("ts", watermark)
-    cond = (
-        (F.col("c.user_id") == F.col("v.user_id"))
-        & (F.col("v.ts") >= F.col("c.ts") - F.expr(f"INTERVAL {within}"))
-        & (F.col("v.ts") <= F.col("c.ts") + F.expr(f"INTERVAL {within}"))
-    )
-    return c.join(v, cond, how).select(
-        F.col("c.user_id").alias("user_id"),
-        F.col("c.event_id").alias("click_id"),
-        F.col("v.event_id").alias("view_id"),
-        F.col("c.ts").alias("click_ts"),
-        F.col("v.ts").alias("view_ts"),
-    )
-
-
-def run_to_parquet(
-    df: DataFrame, out_dir: str, checkpoint_dir: str
-) -> None:
-    """Drain a streaming DataFrame with availableNow into a parquet
-    sink — the durable end of the readStream → transform → writeStream
-    pipeline. Append mode requires a watermark on aggregated streams
-    (windows finalize when the watermark passes them); the checkpoint
-    directory holds offsets + state, making the job exactly-once
-    restartable — kill it mid-backlog and a rerun resumes, never
-    double-writes."""
-    q = (
-        df.writeStream.format("parquet")
-        .option("path", out_dir)
-        .option("checkpointLocation", checkpoint_dir)
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-
-
-def run_foreach_batch(df: DataFrame, sink, checkpoint_dir: str) -> None:
-    """Drain a stream through ``foreachBatch(sink)`` — the escape
-    hatch for sinks Spark has no native writer for (JDBC upserts,
-    key-value stores, message buses). ``sink(batch_df, batch_id)``
-    must be IDEMPOTENT BY batch_id: after a crash the checkpoint
-    replays the last uncommitted batch with the same id, so a sink
-    that keys its writes on the id (overwrite-partition, upsert,
-    transactional produce) yields exactly-once output; a blind append
-    yields at-least-once. That contract — not the transport — is what
-    makes a sink 'kafka-shaped'."""
-    q = (
-        df.writeStream.foreachBatch(sink)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-
-
-def _rate_ticks_to_events(ticks: DataFrame) -> DataFrame:
-    """Map the rate source's (timestamp, value) ticks onto the events
-    shape the §2.9 window jobs consume — every derived column is a
-    pure function of the monotonically-increasing ``value``, so a
-    batch ``range()`` can reproduce the stream's rows EXACTLY."""
-    return ticks.select(
-        F.col("timestamp").alias("ts"),
-        (F.col("value") % 50).alias("user_id"),
-        F.element_at(
-            F.array(F.lit("view"), F.lit("click"), F.lit("purchase")),
-            ((F.col("value") % 3) + 1).cast("int"),
-        ).alias("event_type"),
-        (F.col("value") % 7).cast("double").alias("value"),
-    )
-
-
-def stream_rate_events(
-    spark: SparkSession,
-    rows_per_batch: int = 100,
-    start_ms: int = 0,
-    advance_ms: int = 60_000,
-) -> DataFrame:
-    """readStream front door on the built-in ``rate-micro-batch``
-    source — the live-generator twin of ``stream_events``'s file
-    replay, and the one §2.9 source the container can run unbounded
-    (no Kafka broker here; this is the stand-in with the same
-    DataStreamReader surface).
-
-    Deterministic by construction: micro-batch *i* emits values
-    [i·rpb, (i+1)·rpb) all stamped start + i·advance ms, so
-    ``rate_events_batch(n_batches)`` rebuilds the exact rows any
-    prefix of the stream produced — the parity test closes the loop
-    (stream → window agg → memory sink ≡ batch twin → window agg)."""
-    raw = (
-        spark.readStream.format("rate-micro-batch")
-        .option("rowsPerBatch", rows_per_batch)
-        .option("startTimestamp", start_ms)
-        .option("advanceMillisPerBatch", advance_ms)
-        .load()
-    )
-    return _rate_ticks_to_events(raw)
-
-
-def rate_events_batch(
-    spark: SparkSession,
-    n_batches: int,
-    rows_per_batch: int = 100,
-    start_ms: int = 0,
-    advance_ms: int = 60_000,
-) -> DataFrame:
-    """Batch twin of ``stream_rate_events``: the identical rows the
-    stream's first ``n_batches`` micro-batches emit, from a plain
-    ``range`` — what the parity test aggregates for comparison."""
-    raw = spark.range(n_batches * rows_per_batch).select(
-        F.timestamp_millis(
-            F.lit(start_ms)
-            + F.expr(f"id div {rows_per_batch}") * advance_ms
-        ).alias("timestamp"),
-        F.col("id").alias("value"),
-    )
-    return _rate_ticks_to_events(raw)
-
-
 def run_to_memory(spark: SparkSession, df: DataFrame, name: str) -> DataFrame:
     """Drain a streaming DataFrame with availableNow into a memory sink
     and return the materialized result as a batch DataFrame."""
@@ -276,88 +78,3 @@ def run_to_memory(spark: SparkSession, df: DataFrame, name: str) -> DataFrame:
     )
     q.awaitTermination()
     return spark.table(name)
-
-
-def run_incremental_state(
-    spark: SparkSession,
-    events: DataFrame,
-    state_dir: str,
-    checkpoint_dir: str,
-) -> DataFrame:
-    """Streaming MATERIALIZED VIEW: maintain per-user (n_events,
-    sum_value) state by merging each micro-batch's PARTIAL aggregate
-    into the stored state — the streaming twin of `incremental_agg`'s
-    view-refresh algebra, built from `run_foreach_batch`'s
-    idempotence contract.
-
-    Exactly-once without a transactional table format: state is
-    VERSIONED BY BATCH ID (``state_dir/v{batch_id}``). Each batch
-    reads the latest version below its own id, merges the batch's
-    delta (count/sum are algebraic), and overwrites its own version —
-    a checkpoint-replayed batch recomputes the identical version from
-    the identical predecessor, so replays are no-ops. Per batch the
-    work is the DELTA's aggregate plus a state-sized merge join; the
-    raw history is never rescanned. Versions older than the
-    predecessor a batch merged from are pruned after its write —
-    storage holds at most two versions, and a replay of the newest
-    batch still finds its predecessor intact.
-
-    Listing/pruning use driver-local ``os``, so ``state_dir`` must be
-    a filesystem the driver mounts (local disk, NFS, a FUSE-mounted
-    object store). A direct ``s3://``/``hdfs://`` URI needs the same
-    three calls (list, read-latest, delete-old) re-expressed via the
-    Hadoop FileSystem API; the versioning protocol itself is
-    path-scheme-agnostic.
-
-    Returns the final state as a batch DataFrame.
-    """
-    import os
-    import shutil
-
-    def _versions() -> list[int]:
-        if not os.path.isdir(state_dir):
-            return []
-        return sorted(
-            int(d[1:]) for d in os.listdir(state_dir)
-            if d.startswith("v") and d[1:].isdigit()
-        )
-
-    schema = "user_id long, n_events long, sum_value decimal(18,6)"
-
-    def sink(batch_df: DataFrame, batch_id: int) -> None:
-        # sum(decimal(18,6)) widens to decimal(28,6); pin the STORED
-        # schema to the declared one or the next batch's read fails
-        delta = batch_df.groupBy("user_id").agg(
-            F.count(F.lit(1)).alias("n_events"),
-            F.sum(F.col("value").cast("decimal(18,6)"))
-            .cast("decimal(18,6)").alias("sum_value"),
-        )
-        prior = [v for v in _versions() if v < batch_id]
-        if prior:
-            state = spark.read.schema(schema).parquet(
-                f"{state_dir}/v{prior[-1]}"
-            )
-            s, d = state.alias("s"), delta.alias("d")
-            zero_n = F.lit(0).cast("long")
-            zero_s = F.lit(0).cast("decimal(18,6)")
-            merged = s.join(d, on=["user_id"], how="full_outer").select(
-                "user_id",
-                (F.coalesce(F.col("s.n_events"), zero_n)
-                 + F.coalesce(F.col("d.n_events"), zero_n)).alias("n_events"),
-                (F.coalesce(F.col("s.sum_value"), zero_s)
-                 + F.coalesce(F.col("d.sum_value"), zero_s))
-                .cast("decimal(18,6)").alias("sum_value"),
-            )
-        else:
-            merged = delta
-        merged.write.mode("overwrite").parquet(f"{state_dir}/v{batch_id}")
-        # prune: keep the predecessor this batch merged from (a replay
-        # of THIS batch re-reads it) and drop everything older
-        for v in prior[:-1]:
-            shutil.rmtree(f"{state_dir}/v{v}", ignore_errors=True)
-
-    run_foreach_batch(events, sink, checkpoint_dir)
-    versions = _versions()
-    if not versions:
-        return spark.createDataFrame([], schema)
-    return spark.read.schema(schema).parquet(f"{state_dir}/v{versions[-1]}")

@@ -74,10 +74,9 @@ def test_minhash_lsh_recall_against_exact(spark, docs_local):
 
 def test_minhash_deterministic(spark):
     docs = Catalog(spark, SF_SMOKE).table("documents")
-    s1 = {(r.doc_id, tuple(r.signature))
-          for r in DD.minhash_signatures(docs).collect()}
-    s2 = {(r.doc_id, tuple(r.signature))
-          for r in DD.minhash_signatures(docs.repartition(7)).collect()}
+    s1 = {tuple(r) for r in DD.minhash_signatures_md5(docs).collect()}
+    s2 = {tuple(r)
+          for r in DD.minhash_signatures_md5(docs.repartition(7)).collect()}
     assert s1 == s2, "signatures must not depend on partitioning"
 
 
@@ -415,3 +414,36 @@ def test_cc_loop_releases_per_round_state(spark):
         "CC loop must keep only the final label checkpoint live")
     new_generation()
     assert not _persisted(spark) & live
+
+
+def test_broken_checkpoint_tracking_warns_once(monkeypatch):
+    """A checkpoint whose JVM plan cannot be read is not tracked, and
+    says so: exactly one warning naming the site across two calls, and
+    ``materialized`` still returns the checkpoint."""
+    import warnings
+
+    from py4j.protocol import Py4JError
+
+    from mini_sql_engine_spark.plans import materialize as M
+
+    class _BrokenPlan:
+        def queryExecution(self):
+            raise Py4JError("gateway gone")
+
+    class _Frame:
+        _jdf = _BrokenPlan()
+
+        def localCheckpoint(self, eager):
+            return self
+
+    monkeypatch.setattr(M, "_WARNED", set())
+    tracked = list(M._TRACKED)
+    frame = _Frame()
+    with warnings.catch_warnings(record=True) as caught:
+        warnings.simplefilter("always")
+        assert M.materialized(frame) is frame
+        M._track(frame)
+    assert [str(w.message).split(" failed")[0] for w in caught] == [
+        "plans.materialize._track"]
+    assert caught[0].category is RuntimeWarning
+    assert M._TRACKED == tracked

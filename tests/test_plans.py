@@ -119,39 +119,6 @@ def test_cluster_conf_formulas():
     assert small["spark.sql.adaptive.enabled"] == "true"
 
 
-def test_runtime_bloom_filter_injected_and_semantics_preserved(spark):
-    """With demo thresholds, Catalyst must inject a bloom-filter
-    runtime filter (build on the selective side, might_contain on the
-    probe side) into a shuffle join — and the filtered plan must
-    return exactly the rows of the unfiltered one."""
-    from mini_sql_engine_spark.catalog import Catalog
-    from mini_sql_engine_spark.plans.runtime_filters import (
-        bloom_filter_nodes,
-        enable_runtime_filters,
-        restore_confs,
-    )
-
-    cat = Catalog(spark, SF_SMOKE)
-
-    def build():
-        li, o = cat.table("lineitem"), cat.table("orders")
-        sel = o.filter(F.col("o_orderpriority") == "1-URGENT").select("o_orderkey")
-        return li.join(sel, li.l_orderkey == sel.o_orderkey).select(
-            "l_orderkey", "l_linenumber", "l_quantity"
-        )
-
-    baseline = sorted(map(tuple, build().collect()))
-    prev = enable_runtime_filters(spark, demo_thresholds=True)
-    try:
-        pruned = build()
-        nodes = bloom_filter_nodes(pruned)
-        assert any("bloom_filter_agg" in n for n in nodes), nodes
-        assert any("might_contain" in n for n in nodes), nodes
-        assert sorted(map(tuple, pruned.collect())) == baseline
-    finally:
-        restore_confs(spark, prev)
-
-
 def test_subqueries_decorrelate_to_semi_joins(spark):
     """EXISTS and IN must compile to semi hash joins — no correlated
     per-row re-execution, no cartesian — and the scalar subquery must

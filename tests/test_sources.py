@@ -86,89 +86,6 @@ def test_cli_front_door(spark, ref_dir, capsys):
     assert "error:" in capsys.readouterr().err
 
 
-def test_partitioned_write_prunes_directories(spark, tmp_path):
-    """A filter on the partition column must become a PartitionFilter
-    (planning-time pruning), not a data filter."""
-    from mini_sql_engine_spark.catalog import Catalog
-    from mini_sql_engine_spark.sources.sinks import write_partitioned
-
-    from tests.conftest import SF_SMOKE
-
-    ev = Catalog(spark, SF_SMOKE).table("events")
-    out = str(tmp_path / "events_by_type")
-    write_partitioned(ev, out, ["event_type"])
-
-    df = spark.read.parquet(out).filter(F.col("event_type") == "click")
-    plan = df._sc._jvm.PythonSQLUtils.explainString(
-        df._jdf.queryExecution(), "formatted"
-    )
-    assert "PartitionFilters: [isnotnull(event_type" in plan, plan
-    assert df.count() == ev.filter(F.col("event_type") == "click").count()
-
-
-def test_bucketed_join_runs_without_exchange(spark, tmp_path):
-    """Both sides bucketed on the join key with equal bucket counts →
-    the sort-merge join must have NO shuffle exchange on either side."""
-    from mini_sql_engine_spark.catalog import Catalog
-    from mini_sql_engine_spark.sources.sinks import write_bucketed
-
-    from tests.conftest import SF_SMOKE
-
-    cat = Catalog(spark, SF_SMOKE)
-    li = cat.table("lineitem").select("l_orderkey", "l_quantity")
-    o = cat.table("orders").select("o_orderkey", "o_totalprice")
-    write_bucketed(li, "li_b", "l_orderkey", 8, path=str(tmp_path / "li_b"))
-    write_bucketed(o, "o_b", "o_orderkey", 8, path=str(tmp_path / "o_b"))
-    prev = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
-    try:
-        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-        joined = spark.table("li_b").join(
-            spark.table("o_b"), F.col("l_orderkey") == F.col("o_orderkey")
-        )
-        phys = joined._jdf.queryExecution().executedPlan().toString()
-        assert "SortMergeJoin" in phys, phys
-        assert "Exchange" not in phys, phys
-        assert joined.count() == li.count()
-    finally:
-        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prev)
-        spark.sql("DROP TABLE IF EXISTS li_b")
-        spark.sql("DROP TABLE IF EXISTS o_b")
-
-
-def test_zorder_layout_skips_on_both_dimensions(spark, tmp_path):
-    """On a uniform 256x256 grid split into 16 files, a linear sort on
-    x skips x-predicates but NOTHING on y; the z-ordered layout carves
-    the grid into 4x4 blocks, so a 10-wide stripe on EITHER dimension
-    prunes ~3/4 of the files from footer stats alone."""
-    from mini_sql_engine_spark.sources.layout import (
-        file_skipping_ratio,
-        write_linear,
-        write_zordered,
-    )
-
-    grid = spark.range(256 * 256).select(
-        (F.col("id") % 256).alias("x"),
-        (F.col("id") / 256).cast("long").alias("y"),
-    )
-    lin, zed = str(tmp_path / "lin"), str(tmp_path / "zed")
-    write_linear(grid, "x", lin, n_files=16)
-    write_zordered(grid, ["x", "y"], zed, n_files=16, bits=8)
-
-    # identical content, different layout
-    assert (
-        spark.read.parquet(zed).count() == spark.read.parquet(lin).count() == 65536
-    )
-
-    lin_x = file_skipping_ratio(lin, "x", 10, 19)
-    lin_y = file_skipping_ratio(lin, "y", 10, 19)
-    z_x = file_skipping_ratio(zed, "x", 10, 19)
-    z_y = file_skipping_ratio(zed, "y", 10, 19)
-
-    assert lin_x >= 0.8          # linear layout is perfect on its sort key
-    assert lin_y == 0.0          # ... and useless on the other dimension
-    assert z_x >= 0.5 and z_y >= 0.5, (z_x, z_y)  # z-order skips on BOTH
-
-
 def test_json_orc_connectors_roundtrip(spark, tmp_path):
     """DataSource V2 gives json/orc for free — prove the claim with an
     explicit-schema roundtrip of a catalog table through both formats
@@ -191,53 +108,6 @@ def test_json_orc_connectors_roundtrip(spark, tmp_path):
     assert sorted(map(tuple, back.collect())) == expect
 
 
-def test_approx_count_distinct_error_bound(spark):
-    """The HLL++ sketch (the 100 TB cardinality path) must land within
-    ~3x its configured relative standard deviation of the exact count."""
-    from mini_sql_engine_spark.operators.aggregates import (
-        approx_count_distinct,
-        count_distinct,
-    )
-    from mini_sql_engine_spark.catalog import Catalog
-
-    from tests.conftest import SF_SMOKE
-
-    li = Catalog(spark, SF_SMOKE).table("lineitem")
-    exact = count_distinct(li, "l_partkey", "n").collect()[0].n
-    approx = approx_count_distinct(li, "l_partkey", "n", rsd=0.02).collect()[0].n
-    assert abs(approx - exact) / exact <= 0.06, (approx, exact)
-
-
-def test_quantile_zorder_balances_heavy_tailed_keys(spark):
-    """On a heavy-tailed column, min/max z-order normalization
-    collapses most rows into the bottom code (one outlier stretches
-    the range); equi-depth quantile normalization must spread rows so
-    no code holds more than a few times its fair share."""
-    from mini_sql_engine_spark.sources.layout import (
-        zorder_value,
-        zorder_value_quantile,
-    )
-
-    # exp(x): 99% of mass lands in the bottom ~1% of the value range
-    skewed = spark.range(20_000).select(
-        F.exp(F.col("id") / 1000.0).alias("v"),
-        (F.col("id") % 97).cast("double").alias("u"),
-    )
-
-    def max_code_share(zcol):
-        counts = (
-            skewed.select(zcol).groupBy("_zval").count()
-            .agg(F.max("count").alias("m")).collect()[0].m
-        )
-        return counts / 20_000
-
-    lin = max_code_share(zorder_value(skewed, ["v", "u"], bits=4))
-    qnt = max_code_share(zorder_value_quantile(skewed, ["v", "u"], bits=4))
-    # 2 cols x 4 bits = 256 codes; fair share ~0.4% of rows per code
-    assert lin > 0.05, lin    # linear: >5% of rows pile into one code
-    assert qnt < 0.02, qnt    # equi-depth: every code under 2%
-
-
 def test_cli_runs_from_any_cwd(ref_dir, tmp_path):
     """Packaging contract: the launcher script works with cwd OUTSIDE
     the repo root (its own JVM; PYTHONPATH is derived from the script
@@ -256,101 +126,6 @@ def test_cli_runs_from_any_cwd(ref_dir, tmp_path):
     out = proc.stdout.strip().splitlines()
     assert out[0] == "table1.A,table1.C"
     assert out[1:] == ["4,6"]
-
-
-def test_dynamic_partition_pruning_from_filtered_dim(spark, tmp_path):
-    """The 100 TB star-join staple: fact partitioned by day, dim
-    filtered at runtime → the fact scan must carry a dynamicpruning
-    subquery in its PartitionFilters (only matching day directories
-    are read), not scan all partitions.
-
-    Two DPP preconditions this test pins (both found empirically —
-    violating either silently disables pruning):
-    - the dim predicate must be comparison-shaped: the optimizer's
-      `isLikelySelective` heuristic rejects a bare boolean attribute
-      filter (``.filter(F.col("is_hot"))`` → no DPP);
-    - the join key types must match EXACTLY — partition-directory
-      type inference reads ``day=2024-01-03`` back as DATE, and a
-      cast inserted over the partition column kills the rewrite, so
-      the dim side is cast to the fact's inferred type first."""
-    from mini_sql_engine_spark.catalog import Catalog
-    from mini_sql_engine_spark.sources.sinks import write_partitioned
-
-    ev = (
-        Catalog(spark, "/root/testdata/sf0.001").table("events")
-        .withColumn("day", F.date_format("ts", "yyyy-MM-dd"))
-    )
-    fact = str(tmp_path / "events_by_day")
-    write_partitioned(ev, fact, ["day"])
-    dim = (
-        ev.select("day").distinct()
-        .withColumn("dom", F.dayofmonth(F.to_date("day")))
-    )
-    dim_path = str(tmp_path / "days")
-    dim.write.parquet(dim_path)
-
-    f = spark.read.parquet(fact)
-    day_type = dict(f.dtypes)["day"]
-    d = (
-        spark.read.parquet(dim_path)
-        .filter(F.col("dom") <= 3)
-        .withColumn("day", F.col("day").cast(day_type))
-    )
-    joined = f.join(d, "day").groupBy("event_type").count()
-    plan = joined._jdf.queryExecution().executedPlan().toString()
-    assert "dynamicpruning" in plan.lower(), plan
-    got = {r.event_type: r["count"] for r in joined.collect()}
-    # oracle: recompute without the partitioned layout
-    want = {
-        r.event_type: r["count"]
-        for r in ev.filter(F.dayofmonth(F.to_date("day")) <= 3)
-        .groupBy("event_type").count().collect()
-    }
-    assert got == want
-
-
-def test_compact_files_hits_target_count(spark, tmp_path):
-    from mini_sql_engine_spark.catalog import Catalog
-    from mini_sql_engine_spark.sources.layout import compact_files
-
-    li = Catalog(spark, "/root/testdata/sf0.001").table("lineitem")
-    src = str(tmp_path / "fragmented")
-    li.repartition(64).write.parquet(src)  # 64 tiny files
-    out = str(tmp_path / "compacted")
-    n = compact_files(spark, src, out, target_file_mb=256)
-    assert n == 1  # tiny table → one file target
-    import glob
-    files = glob.glob(out + "/*.parquet")
-    assert len(files) == n
-    assert spark.read.parquet(out).count() == li.count()
-
-
-def test_jdbc_roundtrip_partitioned_read_and_pushdown(spark, tmp_path):
-    """JDBC interop against the Derby engine Spark bundles: write,
-    read back through a 4-way range-partitioned scan (one connection
-    per stride), and verify a filter compiles into the remote WHERE
-    clause (* = fully pushed, Spark re-checks nothing)."""
-    from mini_sql_engine_spark.catalog import Catalog
-    from mini_sql_engine_spark.sources.jdbc import (
-        DERBY_DRIVER, read_jdbc, write_jdbc,
-    )
-    from tests.conftest import SF_SMOKE
-
-    url = f"jdbc:derby:{tmp_path}/jdbc_db;create=true"
-    nation = Catalog(spark, SF_SMOKE).table("nation")
-    write_jdbc(nation, url, "nation", DERBY_DRIVER, num_partitions=2)
-
-    back = read_jdbc(spark, url, "nation", DERBY_DRIVER,
-                     partition_col="n_nationkey", lower=0, upper=25,
-                     num_partitions=4)
-    assert back.rdd.getNumPartitions() == 4
-    assert sorted(map(tuple, back.collect())) == sorted(map(tuple, nation.collect()))
-
-    flt = back.filter(F.col("n_regionkey") == 1).select("n_name")
-    plan_str = flt._sc._jvm.PythonSQLUtils.explainString(
-        flt._jdf.queryExecution(), "formatted")
-    pushed = [ln for ln in plan_str.splitlines() if "PushedFilters" in ln]
-    assert pushed and "*EqualTo(n_regionkey,1)" in pushed[0], plan_str
 
 
 def test_text_source_ingests_raw_corpus(spark, tmp_path):

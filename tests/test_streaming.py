@@ -7,7 +7,6 @@ from __future__ import annotations
 import shutil
 
 import pytest
-from pyspark.sql import functions as F
 
 from mini_sql_engine_spark.catalog import Catalog
 from mini_sql_engine_spark.streaming import event_windows as EW
@@ -62,328 +61,23 @@ def test_streaming_session_equals_batch(spark, events_stream_dir):
     assert sorted(map(tuple, got.collect())) == sorted(map(tuple, expect.collect()))
 
 
-def test_streaming_dedup_one_row_per_key(spark, events_stream_dir):
-    """Custom stateful operator (applyInPandasWithState): exactly one
-    emitted row per distinct user_id across micro-batches, keys equal
-    to the batch-mode distinct set."""
-    from mini_sql_engine_spark.streaming.stateful import streaming_dedup
-
-    stream = jobs.stream_events(spark, events_stream_dir, max_files=1)
-    deduped = streaming_dedup(stream, ["user_id"])
-    q = (
-        deduped.writeStream.format("memory")
-        .queryName("dedup_mem")
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    got = spark.table("dedup_mem").collect()
-    batch_keys = {
-        r.user_id for r in _batch_events(spark, events_stream_dir)
-        .select("user_id").distinct().collect()
-    }
-    assert len(got) == len(batch_keys)  # no key emitted twice
-    assert {r.user_id for r in got} == batch_keys
-
-
-def test_stream_stream_interval_join_equals_batch(spark, events_stream_dir):
-    """Watermarked stream-stream join (clicks ⋈ views per user within
-    ±30 min) drained with availableNow must emit exactly the batch
-    join's pairs — the watermark bounds state, not results, when the
-    replay respects event-time order within the horizon."""
-    stream = jobs.stream_events(spark, events_stream_dir, max_files=4)
-    clicks = stream.filter(F.col("event_type") == "click")
-    views = stream.filter(F.col("event_type") == "view")
-    q = (
-        jobs.streaming_interval_join(clicks, views, watermark="10 days")
-        .writeStream.format("memory")
-        .queryName("ssj_mem")
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    got = sorted(map(tuple, spark.table("ssj_mem").collect()))
-
-    batch = _batch_events(spark, events_stream_dir).withColumn(
-        "ts", F.col("ts").cast("timestamp")
-    )
-    expect = sorted(
-        map(
-            tuple,
-            jobs.streaming_interval_join(
-                batch.filter(F.col("event_type") == "click"),
-                batch.filter(F.col("event_type") == "view"),
-            ).collect(),
-        )
-    )
-    assert got == expect
-    assert len(got) > 0
-
-
-def test_stream_stream_left_outer_join_emits_nulls_after_watermark(spark, tmp_path):
-    """Left-outer stream-stream join: a click with no view in its
-    ±30 min interval must surface with null view columns — but only
-    after the watermark proves no match can still arrive (the eviction
-    happens the micro-batch AFTER the watermark advances past
-    click.ts + interval, so the scenario needs three batches)."""
-    import datetime as dt
-    import time
-
-    stream_dir = tmp_path / "oj_stream"
-    stream_dir.mkdir()
-    schema = ("event_id long, ts timestamp_ntz, user_id long,"
-              " event_type string, value double, props string")
-    T = lambda s: dt.datetime.fromisoformat(s)
-
-    def write_batch(rows, name):
-        batch_dir = tmp_path / name
-        spark.createDataFrame(rows, schema).coalesce(1).write.mode(
-            "overwrite"
-        ).parquet(str(batch_dir))
-        part = next(p for p in batch_dir.iterdir() if p.name.endswith(".parquet"))
-        part.rename(stream_dir / f"{name}.parquet")
-
-    # A: u1 click+view (match), u2 click with no view (outer candidate)
-    write_batch(
-        [(1, T("2024-01-01 01:00"), 1, "click", 1.0, "{}"),
-         (2, T("2024-01-01 01:10"), 1, "view", 1.0, "{}"),
-         (3, T("2024-01-01 02:00"), 2, "click", 1.0, "{}")],
-        "batch_a",
-    )
-    time.sleep(1.2)
-    # The GLOBAL watermark is the MIN across the two watermarked
-    # branches (clicks, views) — advancing only one branch pins the
-    # join's watermark at the other's. So every advancing batch
-    # carries a far-future CLICK and VIEW (by non-matching users
-    # u7/u8, so they add no join rows; u7's clicks stay in state,
-    # never eligible for null-emission before the drain ends).
-    write_batch([(4, T("2024-01-03 12:00"), 7, "click", 1.0, "{}"),
-                 (5, T("2024-01-03 12:00"), 8, "view", 1.0, "{}")], "batch_b")
-    time.sleep(1.2)
-    # C: runs with the post-B watermark (Jan 3 11:00) — far past
-    # u2's click.ts + 30 min — so C evicts + null-emits u2's click
-    write_batch([(6, T("2024-01-03 13:30"), 7, "click", 1.0, "{}"),
-                 (7, T("2024-01-03 13:30"), 8, "view", 1.0, "{}")], "batch_c")
-
-    stream = jobs.stream_events(spark, str(stream_dir), max_files=1)
-    q = (
-        jobs.streaming_interval_join(
-            stream.filter(F.col("event_type") == "click"),
-            stream.filter(F.col("event_type") == "view"),
-            watermark="1 hour", how="left",
-        )
-        .writeStream.format("memory")
-        .queryName("oj_mem")
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    got = sorted(
-        (r.user_id, r.click_id, r.view_id)
-        for r in spark.table("oj_mem").collect()
-    )
-    assert got == [(1, 1, 2), (2, 3, None)], got
-
-
-def test_take_per_key_plumbing(spark, events_stream_dir):
-    """The transformWithStateInPandas quota operator must at least
-    build its lazy plan with a passthrough schema — this part needs no
-    protobuf, so it runs everywhere."""
-    from mini_sql_engine_spark.streaming.stateful import take_per_key
-
-    stream = jobs.stream_events(spark, events_stream_dir, max_files=1)
-    out = take_per_key(stream, ["user_id"], 3)
-    assert out.schema == stream.schema
-    assert out.isStreaming
-
-
-def test_take_per_key_quota(spark, events_stream_dir):
-    """transformWithStateInPandas quota operator: across micro-batches
-    each user_id emits at most `limit` rows, and exactly
-    min(limit, n_rows(user)) — the counter state survives batches.
-
-    Executing (not just planning) transformWithState needs the
-    protobuf python package for its driver↔worker state protocol —
-    skipped where absent (see stateful.py docstring)."""
-    pytest.importorskip(
-        "google.protobuf",
-        reason="environment-impossible skip: Spark 4.x's "
-        "transformWithState worker protocol needs the protobuf python "
-        "package, which is absent from this container and cannot be "
-        "installed (no pip per build constraints). The quota "
-        "SEMANTICS run e2e regardless via the protobuf-free "
-        "applyInPandasWithState fallback in test_take_per_key_gs_quota.",
-    )
-    from mini_sql_engine_spark.streaming.stateful import take_per_key
-
-    limit = 3
-    prev = spark.conf.get("spark.sql.streaming.stateStore.providerClass", None)
-    spark.conf.set(
-        "spark.sql.streaming.stateStore.providerClass",
-        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider",
-    )
-    try:
-        stream = jobs.stream_events(spark, events_stream_dir, max_files=1)
-        q = (
-            take_per_key(stream, ["user_id"], limit)
-            .writeStream.format("memory")
-            .queryName("quota_mem")
-            .outputMode("append")
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-        got = (
-            spark.table("quota_mem").groupBy("user_id").count().collect()
-        )
-        expect = {
-            r.user_id: min(limit, r["count"])
-            for r in _batch_events(spark, events_stream_dir)
-            .groupBy("user_id").count().collect()
-        }
-        assert {r.user_id: r["count"] for r in got} == expect
-        assert max(r["count"] for r in got) <= limit
-    finally:
-        if prev is None:
-            spark.conf.unset("spark.sql.streaming.stateStore.providerClass")
-        else:
-            spark.conf.set("spark.sql.streaming.stateStore.providerClass", prev)
-
-
-def test_take_per_key_gs_quota(spark, events_stream_dir):
-    """Protobuf-free quota e2e: the applyInPandasWithState fallback
-    (GroupState counter) must enforce the same per-key cap across
-    micro-batches — exactly min(limit, n_rows(user)) rows emitted per
-    user. This is the real end-to-end coverage for the quota
-    semantics in this container, where transformWithStateInPandas's
-    worker protocol dependency (protobuf) is absent."""
-    from mini_sql_engine_spark.streaming.stateful import take_per_key_gs
-
-    limit = 3
-    stream = jobs.stream_events(spark, events_stream_dir, max_files=1)
-    q = (
-        take_per_key_gs(stream, ["user_id"], limit)
-        .writeStream.format("memory")
-        .queryName("quota_gs_mem")
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    got = {r.user_id: r["count"]
-           for r in spark.table("quota_gs_mem").groupBy("user_id").count().collect()}
-    expect = {
-        r.user_id: min(limit, r["count"])
-        for r in _batch_events(spark, events_stream_dir)
-        .groupBy("user_id").count().collect()
-    }
-    assert got == expect
-    assert max(got.values()) <= limit
-
-
-def test_streaming_parquet_sink_append_with_watermark(spark, events_stream_dir, tmp_path):
-    """Durable sink: append-mode windowed counts emit exactly the
-    windows the watermark has finalized (end <= max_ts - 1h); the
-    still-open tail stays in state. Emitted rows must exactly match
-    the batch result restricted to finalized windows."""
-    import datetime as dt
-
-    stream = jobs.stream_events(spark, events_stream_dir, max_files=2)
-    jobs.run_to_parquet(
-        jobs.streaming_tumbling_counts(stream),
-        str(tmp_path / "out"), str(tmp_path / "ckpt"),
-    )
-    got = sorted(map(tuple, spark.read.parquet(str(tmp_path / "out")).collect()))
-
-    batch = EW.tumbling_counts(_batch_events(spark, events_stream_dir))
-    max_ts = _batch_events(spark, events_stream_dir).agg(
-        F.max("ts").alias("m")
-    ).collect()[0].m
-    horizon = max_ts - dt.timedelta(hours=1)
-    finalized = sorted(
-        tuple(r) for r in batch.collect()
-        if dt.datetime.fromisoformat(r.ws) + dt.timedelta(days=1) <= horizon
-    )
-    assert got == finalized
-    assert len(got) > 0
-
-
 def test_user_ewma_matches_pandas_oracle(spark, events_stream_dir):
-    """applyInPandas grouped recurrence vs a driver-side pandas oracle."""
+    """The telescoped expression form behind the ``user_ewma`` Qkey vs
+    a driver-side pandas ``ewm`` oracle: equal counts, and values within
+    1e-6 (the engine rounds to 6 places, and pow vs repeated
+    multiplication re-associates)."""
     ev = _batch_events(spark, events_stream_dir)
     got = {r.user_id: (r.n_events, r.ewma_value)
-           for r in EW.user_ewma(ev, alpha=0.3).collect()}
+           for r in EW.user_ewma_expr(ev, alpha=0.3).collect()}
 
     pdf = ev.select("user_id", "ts", "event_id", "value").toPandas()
     for uid, g in pdf.groupby("user_id"):
         g = g.sort_values(["ts", "event_id"])
-        exp = round(float(g["value"].ewm(alpha=0.3, adjust=False).mean().iloc[-1]), 6)
-        assert got[uid] == (len(g), exp), uid
+        exp = float(g["value"].ewm(alpha=0.3, adjust=False).mean().iloc[-1])
+        n, val = got[uid]
+        assert n == len(g), uid
+        assert abs(val - exp) <= 1e-6, (uid, val, exp)
     assert len(got) == pdf["user_id"].nunique()
-
-
-def test_foreach_batch_idempotent_sink(spark, events_stream_dir, tmp_path):
-    """foreachBatch custom sink, written idempotently (one overwritten
-    parquet dir per batch_id): replaying all micro-batches must yield
-    exactly the source rows, and batch ids must be distinct."""
-    seen: list[int] = []
-
-    def sink(batch_df, batch_id: int) -> None:
-        seen.append(batch_id)
-        batch_df.write.mode("overwrite").parquet(
-            str(tmp_path / f"batch_id={batch_id}")
-        )
-
-    stream = jobs.stream_events(spark, events_stream_dir, max_files=2)
-    jobs.run_foreach_batch(
-        stream.select("event_id", "user_id"), sink, str(tmp_path / "ckpt")
-    )
-    assert len(seen) == len(set(seen)) >= 2  # several distinct batches
-    got = sorted(
-        map(tuple, spark.read.parquet(str(tmp_path / "batch_id=*")).collect())
-    )
-    expect = sorted(
-        map(
-            tuple,
-            _batch_events(spark, events_stream_dir)
-            .select("event_id", "user_id").collect(),
-        )
-    )
-    assert got == expect
-
-
-def test_foreach_batch_exactly_once_acid_sink(spark, events_stream_dir,
-                                              tmp_path):
-    """VERDICT r11 #4 — streaming exactly-once onto the ACID table:
-    foreachBatch commits each micro-batch as one AcidTable version
-    carrying (stream_id, batch_id); replaying the WHOLE stream against
-    a FRESH checkpoint re-delivers every batch id and the sink no-ops
-    each one — same version count, same rows, no duplicates from an
-    at-least-once transport."""
-    from mini_sql_engine_spark.sources.acid import AcidTable
-
-    src = _batch_events(spark, events_stream_dir).select(
-        "event_id", "user_id")
-    table = AcidTable.create(spark, str(tmp_path / "acid"), src.limit(0))
-    stream = jobs.stream_events(spark, events_stream_dir, max_files=2)
-    jobs.run_foreach_batch(
-        stream.select("event_id", "user_id"),
-        table.streaming_sink("evq"), str(tmp_path / "ckpt1"))
-    v1 = table.version()
-    assert v1 >= 2  # several micro-batches each committed a version
-    rows1 = sorted(map(tuple, table.read().collect()))
-    assert rows1 == sorted(map(tuple, src.collect()))
-    # full replay (fresh checkpoint = at-least-once redelivery of
-    # every batch): the log already records each batch_id -> no-ops
-    stream2 = jobs.stream_events(spark, events_stream_dir, max_files=2)
-    jobs.run_foreach_batch(
-        stream2.select("event_id", "user_id"),
-        table.streaming_sink("evq"), str(tmp_path / "ckpt2"))
-    assert table.version() == v1
-    assert sorted(map(tuple, table.read().collect())) == rows1
 
 
 def test_watermark_drops_late_data(spark, tmp_path):
@@ -426,131 +120,21 @@ def test_watermark_drops_late_data(spark, tmp_path):
     # passed the window -> dropped
     write_batch([(5, T("2024-01-01 04:00"), 1, "click", 1.0, "{}")], "batch_c")
 
+    # An append-mode sink: append emits a window once, when the
+    # watermark finalizes it. ``run_to_memory``'s complete mode keeps
+    # every window's state, so it neither drops the late event nor
+    # holds back the open window.
     stream = jobs.stream_events(spark, str(stream_dir), max_files=1)
-    jobs.run_to_parquet(
-        jobs.streaming_tumbling_counts(stream),
-        str(tmp_path / "out"), str(tmp_path / "ckpt"),
+    q = (
+        jobs.streaming_tumbling_counts(stream)
+        .writeStream.format("memory")
+        .queryName("late_mem")
+        .outputMode("append")
+        .trigger(availableNow=True)
+        .start()
     )
-    got = [tuple(r) for r in spark.read.parquet(str(tmp_path / "out")).collect()]
+    q.awaitTermination()
+    got = [tuple(r) for r in spark.table("late_mem").collect()]
     # day-1 window: exactly one row, only the on-time event counted;
     # the day-3 window is still open at stream end and must NOT appear
     assert got == [("2024-01-01 00:00:00", "click", 1, 1.0)]
-
-
-def test_streaming_enrichment_equals_batch_and_broadcasts(spark, events_stream_dir):
-    """Stream–static feature-lookup join: identical results to the
-    batch formulation, and the static dimension must enter the
-    micro-batch plan as a broadcast (the stream side never shuffles
-    for the join)."""
-    batch = _batch_events(spark, events_stream_dir).withColumn(
-        "ts", F.col("ts").cast("timestamp")
-    )
-    dim = jobs.user_segment_dim(batch)
-    stream = jobs.stream_events(spark, events_stream_dir, max_files=2)
-    got = jobs.run_to_memory(
-        spark, jobs.streaming_enriched_counts(stream, dim), "enriched_mem"
-    )
-    # same transformation on the batch frame (withWatermark is a
-    # no-op outside streaming) — the two front doors must agree
-    expect = jobs.streaming_enriched_counts(batch, dim)
-    assert sorted(map(tuple, got.collect())) == sorted(map(tuple, expect.collect()))
-    p = expect._jdf.queryExecution().executedPlan().toString()
-    assert "BroadcastHashJoin" in p, p
-
-
-def test_user_ewma_segmented_equals_sequential_across_chunk_sizes(spark, events_stream_dir):
-    """The segmented scan must agree with the one-batch recurrence for
-    ANY chunking — chunk=7 forces every user through multi-chunk
-    affine folds; chunk=10**6 degenerates to the single-batch path.
-    Agreement is to 1e-9 of the pre-rounded value (the fold
-    re-associates float ops at chunk boundaries, nothing more)."""
-    ev = _batch_events(spark, events_stream_dir)
-    base = {r.user_id: (r.n_events, r.ewma_value)
-            for r in EW.user_ewma(ev, alpha=0.3).collect()}
-    variants = {
-        "seg7": EW.user_ewma_segmented(ev, alpha=0.3, chunk=7),
-        "seg1M": EW.user_ewma_segmented(ev, alpha=0.3, chunk=10**6),
-        "expr": EW.user_ewma_expr(ev, alpha=0.3),
-    }
-    for name, df in variants.items():
-        seg = {r.user_id: (r.n_events, r.ewma_value) for r in df.collect()}
-        assert seg.keys() == base.keys()
-        for uid, (n, val) in base.items():
-            sn, sval = seg[uid]
-            assert sn == n, (uid, name)
-            assert abs(sval - val) <= 1e-6, (uid, name, sval, val)
-
-
-def test_incremental_state_equals_batch_aggregate(spark, events_stream_dir, tmp_path):
-    """The streaming materialized view (foreachBatch merging each
-    micro-batch's partial aggregate into batch-id-versioned state)
-    must end exactly at the from-scratch batch aggregate, across
-    multiple micro-batches."""
-    stream = jobs.stream_events(spark, events_stream_dir, max_files=1)
-    final = jobs.run_incremental_state(
-        spark, stream,
-        state_dir=str(tmp_path / "state"),
-        checkpoint_dir=str(tmp_path / "ckpt"),
-    )
-    got = {r.user_id: (r.n_events, float(r.sum_value)) for r in final.collect()}
-    expect = {
-        r.user_id: (r.n, float(r.s))
-        for r in _batch_events(spark, events_stream_dir)
-        .groupBy("user_id")
-        .agg(F.count(F.lit(1)).alias("n"),
-             F.sum(F.col("value").cast("decimal(18,6)")).alias("s"))
-        .collect()
-    }
-    assert got == expect
-    # pruning keeps exactly the final version + its predecessor (the
-    # pair a replay of the newest batch needs); with >= 2 micro-batches
-    # the predecessor's presence also proves it ran incrementally
-    import os
-    assert len(os.listdir(tmp_path / "state")) == 2
-
-
-def test_rate_source_front_door_matches_batch_twin(spark):
-    """§2.9 stretch (VERDICT r4 #8): a live unbounded readStream
-    source (rate-micro-batch — deterministic ticks) driven through
-    the SAME tumbling-window transformation as the batch path must
-    agree with its batch twin on every completed micro-batch prefix.
-    The stream runs real triggers (not availableNow); we stop it
-    after a few batches and rebuild the identical rows with
-    range()."""
-    import time as _time
-
-    rpb = 60
-    stream = jobs.stream_rate_events(spark, rows_per_batch=rpb)
-    q = (
-        jobs.streaming_tumbling_counts(stream, duration="2 minutes",
-                                       watermark="1 minute")
-        .writeStream.format("memory").queryName("rate_tumbling")
-        .outputMode("complete")
-        .trigger(processingTime="500 milliseconds")
-        .start()
-    )
-    try:
-        deadline = _time.time() + 60
-        while _time.time() < deadline:
-            n = spark.sql(
-                "SELECT coalesce(sum(n_events), 0) AS n FROM rate_tumbling"
-            ).collect()[0]["n"]
-            if n >= 3 * rpb:
-                break
-            _time.sleep(0.5)
-    finally:
-        q.stop()
-        q.awaitTermination(30)
-
-    got = spark.table("rate_tumbling").collect()
-    total = sum(r["n_events"] for r in got)
-    assert total >= 3 * rpb, "stream never produced 3 micro-batches"
-    # complete-mode memory sink is rewritten atomically per committed
-    # batch, and every batch carries exactly rpb rows
-    assert total % rpb == 0
-    n_batches = total // rpb
-    expect = EW.tumbling_counts(
-        jobs.rate_events_batch(spark, n_batches, rows_per_batch=rpb),
-        "2 minutes",
-    ).collect()
-    assert sorted(map(tuple, got)) == sorted(map(tuple, expect))

@@ -69,11 +69,9 @@ def test_quality_features_fixture(spark):
     assert r.mean_token_len == round((3 + 1 + 3 + 3) / 4, 6)
 
 
-def test_term_counts_and_doc_freq(spark):
+def test_term_counts(spark):
     df = spark.createDataFrame(
         [(1, "a b a", "en"), (2, "a c", "en")], "doc_id long, text string, lang string"
     )
     tc = {r.term: r.term_count for r in TX.term_counts(df).collect()}
     assert tc == {"a": 3, "b": 1, "c": 1}
-    dfreq = {r.term: r.doc_count for r in TX.doc_freq(df).collect()}
-    assert dfreq == {"a": 2, "b": 1, "c": 1}
