@@ -5,6 +5,13 @@ All hot-path expressions are Spark built-ins / higher-order functions
 (JVM-side, codegen'd); no Python UDFs. Per-document work is
 embarrassingly parallel — no shuffle until an aggregation asks for
 one — so every function here scales linearly with input splits.
+
+The per-row kernels every dedup key shares (``tokens``, ``shingles``)
+are built from SQL expression text: one ``F.expr`` is one py4j call
+plus a JVM parse, where the same tree through the Column DSL costs a
+round trip per node (hundreds per ``shingles`` call).
+The analyzed expression is the same either way, so plans do not
+change.
 """
 
 from __future__ import annotations
@@ -25,10 +32,13 @@ LANG_MARKERS: dict[str, tuple[str, ...]] = {
 }
 
 
-def tokens(text_col: str | Column = "text") -> Column:
+def _tokens_sql(text_col: str) -> str:
+    return f"filter(split({text_col}, ' '), t -> t != '')"
+
+
+def tokens(text_col: str = "text") -> Column:
     """Whitespace tokenization, empty tokens dropped (JVM-side)."""
-    c = F.col(text_col) if isinstance(text_col, str) else text_col
-    return F.filter(F.split(c, " "), lambda t: t != "")
+    return F.expr(_tokens_sql(text_col))
 
 
 def bind_once(col: Column, fn) -> Column:
@@ -42,11 +52,13 @@ def bind_once(col: Column, fn) -> Column:
     single-element ``transform`` makes all downstream references cheap
     array reads. (Measured on shingling: ~10× — the n ``element_at``
     calls per shingle each re-tokenized the full document.)
+    ``shingles`` writes the same shape as SQL text,
+    ``element_at(transform(array(<col>), tok -> ...), 1)``.
     """
     return F.element_at(F.transform(F.array(col), fn), 1)
 
 
-def token_count(text_col: str | Column = "text") -> Column:
+def token_count(text_col: str = "text") -> Column:
     return F.size(tokens(text_col))
 
 
@@ -65,19 +77,23 @@ def bpe_token_count(text_col: str | Column = "text") -> Column:
     return F.size(F.regexp_extract_all(c, F.lit(BPE_TOKEN_RE), 0))
 
 
-def shingles(tok_col: Column, n: int = 3) -> Column:
-    """Word n-gram shingles from a token array (higher-order funcs, no
-    UDF): for each start index i, join tokens[i:i+n] with spaces.
-    Documents shorter than ``n`` tokens yield an empty array.
-    """
-    def build(tok: Column) -> Column:
-        idx = F.sequence(F.lit(0), F.greatest(F.size(tok) - n, F.lit(-1)))
-        return F.when(F.size(tok) >= n,
-                      F.transform(idx, lambda i: F.concat_ws(
-                          " ", *[F.element_at(tok, (i + j + 1).cast("int")) for j in range(n)]
-                      ))).otherwise(F.array().cast("array<string>"))
+def shingles(text_col: str = "text", n: int = 3) -> Column:
+    """Word n-gram shingles of a text column: whitespace-tokenize, then
+    for each start index i join tokens[i:i+n] with spaces. Documents
+    shorter than ``n`` tokens yield an empty array.
 
-    return bind_once(tok_col, build)
+    The token array is bound once per row (the ``bind_once`` shape, in
+    SQL), so the n ``element_at`` reads per shingle are array reads,
+    not re-tokenizations.
+    """
+    grams = ", ".join(f"element_at(tok, i + {j + 1})" for j in range(n))
+    return F.expr(
+        f"element_at(transform(array({_tokens_sql(text_col)}), "
+        f"tok -> CASE WHEN size(tok) >= {n} "
+        f"THEN transform(sequence(0, greatest(size(tok) - {n}, -1)), "
+        f"i -> concat_ws(' ', {grams})) "
+        f"ELSE cast(array() AS array<string>) END), 1)"
+    )
 
 
 def text_stats(docs: DataFrame, lang: str | None = None) -> DataFrame:
@@ -231,7 +247,7 @@ def doc_fingerprints(docs: DataFrame, k: int = 3, window: int = 4) -> DataFrame:
 
     sh = docs.select(
         "doc_id",
-        F.posexplode(shingles(tokens("text"), k)).alias("pos", "shingle"),
+        F.posexplode(shingles("text", k)).alias("pos", "shingle"),
     ).select(
         "doc_id", "pos",
         F.substring(F.md5(F.col("shingle").cast("binary")), 1, 16).alias("h"),

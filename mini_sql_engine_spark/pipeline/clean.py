@@ -174,10 +174,10 @@ def benchmark_contamination(
     """
     corpus_sh = docs.select(
         "doc_id",
-        F.explode(F.array_distinct(shingles(tokens("text"), n))).alias("shingle"),
+        F.explode(F.array_distinct(shingles("text", n))).alias("shingle"),
     )
     bench_sh = bench.select(
-        F.explode(shingles(tokens("text"), n)).alias("shingle")
+        F.explode(shingles("text", n)).alias("shingle")
     ).distinct()
     return (
         corpus_sh.join(F.broadcast(bench_sh), "shingle")

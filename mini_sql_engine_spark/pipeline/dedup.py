@@ -21,10 +21,10 @@ layouts.
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from mini_sql_engine_spark.functions.text import shingles, tokens
+from mini_sql_engine_spark.functions.text import shingles
 from mini_sql_engine_spark.plans import materialized, spread
 
 
@@ -46,8 +46,9 @@ def exact_dedup_counts(docs: DataFrame) -> DataFrame:
     )
 
 
-def _doc_shingles(docs: DataFrame, n: int) -> DataFrame:
-    """(doc_id, shingle) distinct pairs — the inverted-index input.
+def _doc_shingles(docs: DataFrame, n: int, alias: str = "shingle") -> DataFrame:
+    """(doc_id, <alias>) distinct pairs — the inverted-index input and
+    the exploded shingle rows every per-doc hash kernel aggregates.
 
     The per-doc dedup happens IN THE ROW (``array_distinct`` before
     ``explode``): doc_ids are unique, so the exploded pairs are
@@ -56,11 +57,12 @@ def _doc_shingles(docs: DataFrame, n: int) -> DataFrame:
     whole dedup stack for a set each row already knew (r13 opt:
     one Exchange removed from every inverted-index consumer).
     ``spread`` floors the scan parallelism so the shingle build
-    isn't serialized by a one-split input (no-op at scale)."""
-    return spread(docs.select("doc_id", "text")).select(
+    isn't serialized by a one-split input (no-op at scale); it probes
+    ``docs`` itself, so a catalog frame's probe is paid once per
+    session, and the projection is pushed under its exchange."""
+    return spread(docs).select(
         "doc_id",
-        F.explode(F.array_distinct(shingles(tokens("text"), n)))
-        .alias("shingle"),
+        F.explode(F.array_distinct(shingles("text", n))).alias(alias),
     )
 
 
@@ -181,7 +183,8 @@ def minhash_band_hashes(
     (interpreted lambdas) + (doc, band) re-aggregation it replaces;
     docs with no shingles drop at the explode, same semantics as the
     old no-group behavior. ``spread`` floors the scan parallelism
-    under the hash kernel (no-op at scale).
+    under the hash kernel (no-op at scale). The minima and band rows
+    are SQL text, one py4j call each.
 
     Per (doc, seed): minhash = min over shingles of xxhash64(shingle,
     seed); per (doc, band of r=num_hashes/bands seeds): band_hash =
@@ -190,35 +193,19 @@ def minhash_band_hashes(
     if num_hashes % bands:
         raise ValueError("num_hashes must be divisible by bands")
     r = num_hashes // bands
-    ex = spread(docs.select("doc_id", "text")).select(
-        "doc_id",
-        F.explode(F.array_distinct(shingles(tokens("text"), n)))
-        .alias("_s"),
-    )
-    mins = ex.groupBy("doc_id").agg(*[
-        F.min(F.xxhash64(F.col("_s"), F.lit(i))).alias(f"_m{i}")
+    mins = _doc_shingles(docs, n, "_s").groupBy("doc_id").agg(*[
+        F.expr(f"min(xxhash64(_s, {i})) AS _m{i}")
         for i in range(num_hashes)
     ])
-    bands_arr = F.array(*[
-        F.struct(
-            F.lit(b).cast("int").alias("band_id"),
-            F.xxhash64(
-                F.concat_ws(",", *[
-                    F.col(f"_m{b * r + j}").cast("string")
-                    for j in range(r)
-                ])
-            ).alias("band_hash"),
-        )
+    bands_arr = ", ".join(
+        f"struct({b} AS band_id, xxhash64(concat_ws(',', "
+        + ", ".join(f"cast(_m{b * r + j} AS string)" for j in range(r))
+        + ")) AS band_hash)"
         for b in range(bands)
-    ])
-    return (
-        mins.select("doc_id", F.explode(bands_arr).alias("_b"))
-        .select(
-            "doc_id",
-            F.col("_b.band_id").alias("band_id"),
-            F.col("_b.band_hash").alias("band_hash"),
-        )
     )
+    return mins.selectExpr(
+        "doc_id", f"explode(array({bands_arr})) AS _b"
+    ).selectExpr("doc_id", "_b.band_id AS band_id", "_b.band_hash AS band_hash")
 
 
 def minhash_lsh_candidates(
@@ -292,8 +279,7 @@ def simhash(docs: DataFrame, text_col: str = "text") -> DataFrame:
         )
         """
     )
-    return spread(docs.select("doc_id", F.col(text_col))).select(
-        "doc_id", fp.alias("simhash"))
+    return spread(docs).select("doc_id", fp.alias("simhash"))
 
 
 def hamming_pairs(sim: DataFrame, max_distance: int = 8) -> DataFrame:
@@ -370,34 +356,19 @@ def minhash_signatures_md5(
     codegen. The cost is one keyed exchange of per-doc signature
     partials (~num_hashes·16 B per doc per task — noise next to the
     text the stage reads); ``spread`` floors the scan parallelism
-    under the md5 kernel (no-op at scale).
+    under the md5 kernel (no-op at scale). The aggregates and the
+    ``posexplode`` are SQL text: a build sends ~100 py4j commands
+    instead of the Column DSL's ~1,070.
     """
-    ex = spread(docs.select("doc_id", "text")).select(
-        "doc_id",
-        F.explode(F.array_distinct(shingles(tokens("text"), n)))
-        .alias("_s"),
-    )
-    mins = ex.groupBy("doc_id").agg(*[
-        F.min(
-            F.substring(
-                F.md5(F.concat(F.lit(f"{i}:"), F.col("_s"))
-                      .cast("binary")),
-                1, 16,
-            )
-        ).alias(f"_m{i}")
+    mins = _doc_shingles(docs, n, "_s").groupBy("doc_id").agg(*[
+        F.expr(f"min(substring(md5(cast(concat('{i}:', _s) AS binary)), "
+               f"1, 16)) AS _m{i}")
         for i in range(num_hashes)
     ])
-    return (
-        mins.select(
-            "doc_id",
-            F.posexplode(
-                F.array(*[F.col(f"_m{i}") for i in range(num_hashes)])
-            ).alias("seed", "minhash"),
-        )
-        .select(
-            "doc_id", F.col("seed").cast("long").alias("seed"), "minhash"
-        )
-    )
+    sig = ", ".join(f"_m{i}" for i in range(num_hashes))
+    return mins.selectExpr(
+        "doc_id", f"posexplode(array({sig})) AS (seed, minhash)"
+    ).selectExpr("doc_id", "cast(seed AS bigint) AS seed", "minhash")
 
 
 def lsh_candidates_md5(
@@ -503,14 +474,7 @@ def dup_ngram_fraction(docs: DataFrame, n: int = 5) -> DataFrame:
     keyed aggregate. Linear in total shingle volume — no pair
     expansion, so unlike Jaccard pairs it needs no df cap to scale.
     """
-    pairs = materialized(
-        spread(docs.select("doc_id", "text")).select(
-            "doc_id",
-            F.explode(
-                F.array_distinct(shingles(tokens("text"), n))
-            ).alias("shingle"),
-        )
-    )
+    pairs = materialized(_doc_shingles(docs, n))
     dfreq = pairs.groupBy("shingle").agg(
         F.count(F.lit(1)).alias("df")
     )
@@ -596,10 +560,9 @@ def prefix_filter_jaccard_pairs(
     # sides of the candidate join — materialize it once instead of
     # rebuilding the shingle arrays per side
     arrs = materialized(
-        spread(docs.select("doc_id", "text")).select(
+        spread(docs).select(
             "doc_id",
-            F.array_sort(F.array_distinct(shingles(tokens("text"), n)))
-            .alias("_sh"),
+            F.array_sort(F.array_distinct(shingles("text", n))).alias("_sh"),
         ).filter(F.size("_sh") > 0)
     )
     j = (
@@ -697,40 +660,35 @@ def simhash_md5_chunks(docs: DataFrame, n: int = 3) -> DataFrame:
     (64 interpreted ``aggregate`` passes over the shingle array)
     measured 17 s at sf0.1 vs seconds for this shape.
     """
-    ex = spread(docs.select("doc_id", "text")).select(
-        "doc_id",
-        F.explode(F.array_distinct(shingles(tokens("text"), n)))
-        .alias("_s"),
-    ).select("doc_id", F.md5(F.col("_s").cast("binary")).alias("_h"))
+    ex = _doc_shingles(docs, n, "_s").select(
+        "doc_id", F.md5(F.col("_s").cast("binary")).alias("_h"))
 
     # md5 hex chars 1..16 (the first 64 digest bits) as one long,
     # big-endian: scheme bit j (pos j//4+1, nibble bit 3−j%4) is word
     # bit 63−j
-    hi = F.conv(F.substring("_h", 1, 8), 16, 10).cast("long")
-    lo = F.conv(F.substring("_h", 9, 8), 16, 10).cast("long")
-    w = ex.select("doc_id", F.shiftleft(hi, 32).bitwiseOR(lo).alias("_w"))
+    w = ex.selectExpr(
+        "doc_id",
+        "shiftleft(cast(conv(substring(_h, 1, 8), 16, 10) AS bigint), 32)"
+        " | cast(conv(substring(_h, 9, 8), 16, 10) AS bigint) AS _w")
 
-    lanes = F.lit(4294967297)  # 1 | 1<<32: two 32-bit popcount lanes
+    # 4294967297 = 1 | 1<<32: two 32-bit popcount lanes
     packed = w.groupBy("doc_id").agg(
-        F.count(F.lit(1)).alias("_n"),
-        *[F.sum(F.shiftright(F.col("_w"), i).bitwiseAND(lanes))
-          .alias(f"_a{i}") for i in range(32)],
+        F.expr("count(1) AS _n"),
+        *[F.expr(f"sum(shiftright(_w, {i}) & 4294967297) AS _a{i}")
+          for i in range(32)],
     )
 
-    mask32 = F.lit(4294967295)  # 0xFFFFFFFF
-
-    def popcnt(p: int) -> Column:
+    def popcnt(p: int) -> str:
         """S_p = count of shingles whose md5 word has bit p set."""
-        if p < 32:
-            return F.col(f"_a{p}").bitwiseAND(mask32)
-        return F.shiftright(F.col(f"_a{p - 32}"), 32).bitwiseAND(mask32)
+        lane = f"_a{p}" if p < 32 else f"shiftright(_a{p - 32}, 32)"
+        return f"({lane} & 4294967295)"  # 0xFFFFFFFF
 
-    cols = []
-    for k in range(4):
-        chunk = F.lit(0)
-        for b in range(16):
-            j = k * 16 + b  # scheme bit index → word bit 63−j
-            vote_pos = (popcnt(63 - j) * 2) > F.col("_n")
-            chunk = chunk + vote_pos.cast("long") * (1 << (15 - b))
-        cols.append(chunk.alias(f"c{k}"))
-    return packed.select("doc_id", *cols)
+    # scheme bit j = k·16 + b is word bit 63−j
+    chunks = [
+        " + ".join(
+            ["0"] + [f"cast({popcnt(63 - k * 16 - b)} * 2 > _n AS bigint)"
+                     f" * {1 << (15 - b)}" for b in range(16)]
+        ) + f" AS c{k}"
+        for k in range(4)
+    ]
+    return packed.selectExpr("doc_id", *chunks)

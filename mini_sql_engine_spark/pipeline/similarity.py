@@ -29,17 +29,21 @@ from pyspark.sql.window import Window
 from mini_sql_engine_spark.catalog import EMBEDDING_DIM
 
 
-def _dot(a: Column, b: Column) -> Column:
-    """JVM-side dot product: zip_with multiply → aggregate sum (double)."""
-    return F.aggregate(
-        F.zip_with(a, b, lambda x, y: x.cast("double") * y.cast("double")),
-        F.lit(0.0),
-        lambda acc, v: acc + v,
-    )
+def _dot_sql(a: str, b: str) -> str:
+    return (f"aggregate(zip_with({a}, {b}, "
+            f"(x, y) -> cast(x AS double) * cast(y AS double)), "
+            f"0.0D, (acc, v) -> acc + v)")
 
 
-def _norm(v: Column) -> Column:
-    return F.sqrt(_dot(v, v))
+def _dot(a: str, b: str) -> Column:
+    """JVM-side dot product of two array columns, by name: zip_with
+    multiply → aggregate sum (double). Built from SQL text, so it
+    costs one py4j call rather than one per Column-DSL node."""
+    return F.expr(_dot_sql(a, b))
+
+
+def _norm(v: str) -> Column:
+    return F.expr(f"sqrt({_dot_sql(v, v)})")
 
 
 def _safe_denom(n: Column) -> Column:
@@ -67,10 +71,10 @@ def brute_force_topk(
     """
     q = queries.select(
         F.col(id_col).alias("query_id"), F.col(vec_col).alias("q_vec")
-    ).withColumn("q_norm", _norm(F.col("q_vec")))
+    ).withColumn("q_norm", _norm("q_vec"))
     c = corpus.select(
         F.col(id_col).alias("neighbor_id"), F.col(vec_col).alias("c_vec")
-    ).withColumn("c_norm", _norm(F.col("c_vec")))
+    ).withColumn("c_norm", _norm("c_vec"))
     scored = (
         c.crossJoin(F.broadcast(q))
         .filter(F.col("neighbor_id") != F.col("query_id"))
@@ -78,7 +82,7 @@ def brute_force_topk(
             "query_id",
             "neighbor_id",
             (
-                _dot(F.col("q_vec"), F.col("c_vec"))
+                _dot("q_vec", "c_vec")
                 / _safe_denom(F.col("q_norm") * F.col("c_norm"))
             ).alias("cosine"),
         )
@@ -154,13 +158,13 @@ def lsh_topk(
     c = multi_table_buckets(
         corpus.select(
             F.col(id_col).alias("neighbor_id"), F.col(vec_col).alias("c_vec")
-        ).withColumn("c_norm", _norm(F.col("c_vec"))),
+        ).withColumn("c_norm", _norm("c_vec")),
         n_planes, n_tables, "c_vec",
     )
     q = multi_table_buckets(
         queries.select(
             F.col(id_col).alias("query_id"), F.col(vec_col).alias("q_vec")
-        ).withColumn("q_norm", _norm(F.col("q_vec"))),
+        ).withColumn("q_norm", _norm("q_vec")),
         n_planes, n_tables, "q_vec",
     )
     cand = (
@@ -171,7 +175,7 @@ def lsh_topk(
     scored = cand.select(
         "query_id",
         "neighbor_id",
-        (_dot(F.col("q_vec"), F.col("c_vec"))
+        (_dot("q_vec", "c_vec")
          / _safe_denom(F.col("q_norm") * F.col("c_norm"))).alias("cosine"),
     )
     return _topk_per_query(scored, k)
@@ -413,12 +417,12 @@ def ivf_topk(
 
     c = corpus.select(
         F.col(id_col).alias("neighbor_id"), F.col(vec_col).alias("c_vec")
-    ).withColumn("c_norm", _norm(F.col("c_vec"))).withColumn(
+    ).withColumn("c_norm", _norm("c_vec")).withColumn(
         "cell", F.element_at(_cell_probes(cent, 1)(F.col("c_vec")), 1)
     )
     q = queries.select(
         F.col(id_col).alias("query_id"), F.col(vec_col).alias("q_vec")
-    ).withColumn("q_norm", _norm(F.col("q_vec"))).withColumn(
+    ).withColumn("q_norm", _norm("q_vec")).withColumn(
         "cell", F.explode(_cell_probes(cent, n_probe)(F.col("q_vec")))
     )
     cand = (
@@ -428,7 +432,7 @@ def ivf_topk(
     scored = cand.select(
         "query_id",
         "neighbor_id",
-        (_dot(F.col("q_vec"), F.col("c_vec"))
+        (_dot("q_vec", "c_vec")
          / _safe_denom(F.col("q_norm") * F.col("c_norm"))).alias("cosine"),
     )
     return _topk_per_query(scored, k)
@@ -531,8 +535,8 @@ def adjacent_cosine(embeddings: DataFrame) -> DataFrame:
         (F.col("vec_id") - 1).alias("vec_id"), F.col("embedding").alias("eb")
     )
     cos = F.round(
-        _dot(F.col("ea"), F.col("eb"))
-        / (_norm(F.col("ea")) * _norm(F.col("eb"))),
+        _dot("ea", "eb")
+        / (_norm("ea") * _norm("eb")),
         4,
     )
     return a.join(b, "vec_id").select("vec_id", cos.alias("cos_next"))
@@ -732,7 +736,7 @@ def kmeans_assignments(embeddings: DataFrame, k: int = 8,
     # zero vectors: divide by 1 instead of 0 (ANSI mode errors on /0),
     # so they stay zero and deterministically land in cluster 0
     unit = bind_once(
-        _norm(F.col(vec_col)),
+        _norm(vec_col),
         lambda nv: F.transform(
             F.col(vec_col),
             lambda x: x.cast("double")
@@ -1089,7 +1093,7 @@ def ivfpq_topk(
     q = (
         queries.select(F.col(id_col).alias("query_id"),
                        F.col(vec_col).alias("q_vec"))
-        .withColumn("q_norm", _norm(F.col("q_vec")))
+        .withColumn("q_norm", _norm("q_vec"))
         .withColumn("cell",
                     F.explode(_cell_probes(cent, n_probe)(F.col("q_vec"))))
     )
@@ -1148,8 +1152,8 @@ def ivfpq_topk(
         c_exact.join(F.broadcast(short), "neighbor_id")
         .select(
             "query_id", "neighbor_id",
-            (_dot(F.col("q_vec"), F.col("c_vec"))
-             / _safe_denom(F.col("q_norm") * _norm(F.col("c_vec"))))
+            (_dot("q_vec", "c_vec")
+             / _safe_denom(F.col("q_norm") * _norm("c_vec")))
             .alias("cosine"),
         )
     )

@@ -3091,7 +3091,7 @@ def boilerplate_strip(spark, sf_dir):
     # r13 opt: `spread` floors the scan parallelism under the segment
     # build (one-split input serialized the transform+explode)
     seg_rows = (
-        PL.spread(d.select("doc_id", "text"))
+        PL.spread(d)
         .select("doc_id", toks.alias("_toks"))
         .select("doc_id", F.posexplode(segs).alias("seg_pos", "seg"))
     )
@@ -3215,12 +3215,12 @@ def knn_label(spark, sf_dir):
          .select(
              F.col("vec_id").alias("q_id"),
              F.col("embedding").alias("qv"),
-             _norm(F.col("embedding")).alias("_qn")))
+             _norm("embedding").alias("_qn")))
     c = emb.filter(F.col("vec_id") % 10 != 0).select(
         F.col("vec_id").alias("c_id"), F.col("embedding").alias("cv"),
-        "label", _norm(F.col("embedding")).alias("_cn"))
+        "label", _norm("embedding").alias("_cn"))
     sim = F.round(
-        _dot(F.col("qv"), F.col("cv"))
+        _dot("qv", "cv")
         / (F.col("_qn") * F.col("_cn")), 4)
     pairs = c.crossJoin(F.broadcast(q)).select(
         "q_id", "c_id", "label", sim.alias("sim"))
@@ -3252,14 +3252,14 @@ def nearest_centroid(spark, sf_dir):
     emb = Catalog(spark, sf_dir).table("embeddings")
     cent = emb.filter(F.col("vec_id") < 8).select(
         F.col("vec_id").alias("cent_id"), F.col("embedding").alias("cv"),
-        _norm(F.col("embedding")).alias("_cn"))
+        _norm("embedding").alias("_cn"))
     pts = emb.filter(F.col("vec_id") >= 8).select(
         "vec_id", F.col("embedding").alias("pv"),
-        _norm(F.col("embedding")).alias("_pn"))
+        _norm("embedding").alias("_pn"))
     # norms projected pre-join (once per row, not per pair) — same
     # doubles, same rounded sims
     sim = F.round(
-        _dot(F.col("pv"), F.col("cv"))
+        _dot("pv", "cv")
         / (F.col("_pn") * F.col("_cn")), 4)
     scored = pts.crossJoin(F.broadcast(cent)).select(
         "vec_id", "cent_id", sim.alias("sim"))
@@ -5972,7 +5972,7 @@ def char_entropy(spark, sf_dir):
     d = Catalog(spark, sf_dir).table("documents")
     # r13 opt: `spread` floors the scan parallelism under the char
     # explode (a one-split input serialized the whole generate+agg)
-    chars = PL.spread(d.select("doc_id", "text")).select(
+    chars = PL.spread(d).select(
         "doc_id",
         F.explode(F.expr(
             "transform(sequence(1, length(text)), "

@@ -12,6 +12,7 @@ deterministic across engines.
 from __future__ import annotations
 
 import os
+import tempfile
 
 from pyspark.sql import SparkSession
 
@@ -70,6 +71,10 @@ def get_spark(
     cycles through many different queries compiles each class once,
     not once per cycle. The cache is JVM-wide and takes its size from
     the session that first generates code in the process.
+
+    The SQL warehouse defaults to one fixed directory under the system
+    temp dir, so a session never creates ``spark-warehouse/`` in the
+    caller's working directory; ``extra_conf`` may set its own.
     """
     cpus = cpus or os.environ.get("SPARK_GRAFT_CPUS") or "*"
     shuffle_partitions = shuffle_partitions or DEFAULT_SHUFFLE_PARTITIONS
@@ -107,6 +112,8 @@ def get_spark(
         # (truncation to µs — matches DuckDB's ns→µs behavior).
         .config("spark.sql.legacy.parquet.nanosAsLong", "true")
         .config("spark.ui.enabled", "false")
+        .config("spark.sql.warehouse.dir", os.path.join(
+            tempfile.gettempdir(), "mini_sql_engine_spark-warehouse"))
         .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEMORY", "16g"))
     )
     if extra_conf:

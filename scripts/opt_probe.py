@@ -2,6 +2,9 @@
 """Optimization-round probe: isolated timings + plan capture.
 
 For each Qkey named on the command line:
+  * time one warm build of the frame (``build_ms``) and count the py4j
+    commands it sends (``py4j_calls``, without py4j's own ``m`` memory
+    commands),
   * time the noop-sink execution min-of-N on one warm session
     (bench.py methodology, labelled via setJobDescription),
   * count the Janino compiles those runs made and the milliseconds
@@ -21,9 +24,11 @@ the judge checks plan claims against the committed files.
 from __future__ import annotations
 
 import argparse
+import contextlib
 import json
 import os
 import sys
+import time
 
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 sys.path.insert(0, REPO)
@@ -31,6 +36,28 @@ sys.path.insert(0, REPO)
 from bench import force, timed_min  # noqa: E402
 from mini_sql_engine_spark.queries import QUERIES  # noqa: E402
 from mini_sql_engine_spark.session import get_spark  # noqa: E402
+
+
+@contextlib.contextmanager
+def py4j_commands(spark):
+    """Count the py4j commands this process sends to the JVM inside the
+    block, apart from py4j's ``m`` memory commands (the garbage
+    collection of Python-side handles, which depends on when CPython
+    frees them). Yields a one-element list holding the count."""
+    client = spark.sparkContext._gateway._gateway_client
+    count = [0]
+    send = client.send_command
+
+    def counted(command, *args, **kwargs):
+        if not command.startswith("m\n"):
+            count[0] += 1
+        return send(command, *args, **kwargs)
+
+    client.send_command = counted
+    try:
+        yield count
+    finally:
+        del client.send_command
 
 
 def main() -> None:
@@ -61,15 +88,23 @@ def main() -> None:
 
     out: dict[str, float] = {}
     janino: dict[str, dict[str, float]] = {}
+    build: dict[str, dict[str, float]] = {}
     for key in args.keys:
         fn = QUERIES[key]
+        df = fn(spark, args.sf_dir)  # warms the catalog frames
         if not args.no_plan:
-            df = fn(spark, args.sf_dir)
             plan = df._sc._jvm.PythonSQLUtils.explainString(
                 df._jdf.queryExecution(), "formatted")
             with open(os.path.join(plans_dir, f"{key}_{args.tag}.txt"),
                       "w") as fh:
                 fh.write(plan)
+        t0 = time.perf_counter()
+        with py4j_commands(spark) as sent:
+            fn(spark, args.sf_dir)
+        build[key] = {
+            "build_ms": round((time.perf_counter() - t0) * 1e3, 1),
+            "py4j_calls": sent[0],
+        }
         spark.sparkContext.setJobDescription(f"probe:{key}")
         n0, ns0 = compiles.getCount(), codegen.compileTime()
         out[key] = timed_min(lambda: force(fn(spark, args.sf_dir)),
@@ -78,9 +113,10 @@ def main() -> None:
             "compiles": compiles.getCount() - n0,
             "compile_ms": round((codegen.compileTime() - ns0) / 1e6, 1),
         }
-        print(json.dumps({key: out[key], **janino[key]}), flush=True)
-    print(json.dumps({"tag": args.tag, "timings": out, "janino": janino}),
-          flush=True)
+        print(json.dumps({key: out[key], **build[key], **janino[key]}),
+              flush=True)
+    print(json.dumps({"tag": args.tag, "timings": out, "build": build,
+                      "janino": janino}), flush=True)
 
 
 if __name__ == "__main__":

@@ -212,14 +212,13 @@ def test_minhash_band_hashes_matches_hof_reference(spark):
     """r13 opt pin: the exploded-codegen band-hash kernel is
     bit-identical to the per-row HOF reference formulation (the
     pre-r13 shape, kept here as the executable spec)."""
-    from mini_sql_engine_spark.functions.text import (
-        bind_once, shingles, tokens)
+    from mini_sql_engine_spark.functions.text import bind_once, shingles
 
     docs = Catalog(spark, SF_SMOKE).table("documents")
     num_hashes, bands = 32, 8
     r = num_hashes // bands
 
-    sh = F.array_distinct(shingles(tokens("text"), 3))
+    sh = F.array_distinct(shingles("text", 3))
 
     def sigs(v):
         return F.when(
@@ -257,12 +256,11 @@ def test_minhash_band_hashes_matches_hof_reference(spark):
 def test_minhash_signatures_md5_matches_hof_reference(spark):
     """r13 opt pin: the exploded-codegen md5 signature kernel is
     bit-identical to the per-row HOF reference formulation."""
-    from mini_sql_engine_spark.functions.text import (
-        bind_once, shingles, tokens)
+    from mini_sql_engine_spark.functions.text import bind_once, shingles
 
     docs = Catalog(spark, SF_SMOKE).table("documents")
     num_hashes = 8
-    sh = F.array_distinct(shingles(tokens("text"), 3))
+    sh = F.array_distinct(shingles("text", 3))
 
     def sigs(v):
         return F.when(
@@ -301,12 +299,12 @@ def test_simhash_md5_chunks_matches_digit_vote_reference(spark):
     """r14 opt pin: the bit-packed two-lane vote kernel is
     bit-identical to the r13 per-digit 64-aggregate reference
     formulation (kept here as the executable spec)."""
-    from mini_sql_engine_spark.functions.text import shingles, tokens
+    from mini_sql_engine_spark.functions.text import shingles
 
     docs = Catalog(spark, SF_SMOKE).table("documents")
     ex = docs.select(
         "doc_id",
-        F.explode(F.array_distinct(shingles(tokens("text"), 3)))
+        F.explode(F.array_distinct(shingles("text", 3)))
         .alias("_s"),
     ).select("doc_id", F.md5(F.col("_s").cast("binary")).alias("_h"))
 

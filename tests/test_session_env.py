@@ -35,3 +35,13 @@ def test_contract_runs_from_foreign_cwd_without_pythonpath(tmp_path):
     )
     assert "WORKER-IMPORT-OK" in out.stdout, (out.stdout[-2000:],
                                               out.stderr[-2000:])
+
+
+def test_session_warehouse_is_outside_the_checkout(spark):
+    """A session must not create ``spark-warehouse/`` in the checkout:
+    ``get_spark`` points the SQL warehouse under the system temp dir."""
+    from urllib.parse import urlparse
+
+    wh = urlparse(spark.conf.get("spark.sql.warehouse.dir")).path
+    repo = os.path.realpath(REPO)
+    assert os.path.commonpath([os.path.realpath(wh), repo]) != repo, wh

@@ -18,7 +18,7 @@ def test_shingles_small(spark):
     out = {
         r.doc_id: r.sh
         for r in df.select(
-            "doc_id", TX.shingles(TX.tokens("text"), 3).alias("sh")
+            "doc_id", TX.shingles("text", 3).alias("sh")
         ).collect()
     }
     assert out[1] == ["a b c", "b c d"]
