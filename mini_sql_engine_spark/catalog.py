@@ -146,6 +146,12 @@ BROADCAST_TABLES = frozenset({"region", "nation", "supplier"})
 # threads missing the same entry each store an equivalent frame.
 _RESOLVED: dict[str, tuple[tuple[int, int], SparkSession, DataFrame]] = {}
 
+# session -> {view name: the resolved frame that temp view is bound to}.
+# A session has an entry once Catalog has set its two confs on it, so
+# later Catalogs of that session send no py4j command until they read
+# or bind something new.
+_SESSIONS: dict[SparkSession, dict[str, DataFrame]] = {}
+
 EMBEDDING_DIM = 64
 
 
@@ -161,14 +167,19 @@ class Catalog:
     def __init__(self, spark: SparkSession, sf_dir: str = DEFAULT_SF_DIR):
         self.spark = spark
         self.sf_dir = sf_dir
-        # Defensive session confs: the contract must work under a
-        # caller-provided vanilla session, not only session.get_spark().
-        # nanosAsLong: events.parquet carries TIMESTAMP(NANOS), which
-        # the vectorized reader otherwise rejects (PARQUET_TYPE_ILLEGAL);
-        # UTC: timestamp formatting/window bucketing must not depend on
-        # the host timezone. Both are runtime-settable SQL confs.
-        spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-        spark.conf.set("spark.sql.session.timeZone", "UTC")
+        views = _SESSIONS.get(spark)
+        if views is None:
+            # Defensive session confs, set on a session's first Catalog:
+            # the contract must work under a caller-provided vanilla
+            # session, not only session.get_spark(). nanosAsLong:
+            # events.parquet carries TIMESTAMP(NANOS), which the
+            # vectorized reader otherwise rejects (PARQUET_TYPE_ILLEGAL);
+            # UTC: timestamp formatting/window bucketing must not depend
+            # on the host timezone. Both are runtime-settable SQL confs.
+            spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
+            spark.conf.set("spark.sql.session.timeZone", "UTC")
+            views = _SESSIONS.setdefault(spark, {})
+        self._views = views
 
     def path(self, name: str) -> str:
         if name not in TABLE_SCHEMAS:
@@ -191,9 +202,19 @@ class Catalog:
         return df
 
     def register_all(self) -> None:
-        """Register every table as a temp view for the SQL front door."""
+        """Bind every table as a temp view of its own name, for the SQL
+        front door. The engine owns the ten catalog view names
+        (``TABLES``) in a session: a caller that replaces or drops one
+        of them must not expect the engine to notice. A view is
+        re-created only when it is not bound to the table's current
+        resolved frame: on a session's first call, after a switch to
+        another ``sf_dir`` and after a file is rewritten. A call that
+        changes nothing sends no py4j command."""
         for name in TABLE_SCHEMAS:
-            self.table(name).createOrReplaceTempView(name)
+            df = self.table(name)
+            if self._views.get(name) is not df:
+                df.createOrReplaceTempView(name)
+                self._views[name] = df
 
     def __getattr__(self, name: str) -> DataFrame:
         if name in TABLE_SCHEMAS:

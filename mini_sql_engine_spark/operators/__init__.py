@@ -12,7 +12,6 @@ from mini_sql_engine_spark.operators import (  # noqa: F401
     asof,
     joins,
     range_join,
-    relational,
     sets,
     skew,
     sorting,

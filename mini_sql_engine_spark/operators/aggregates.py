@@ -40,16 +40,6 @@ def exact_sum(col: str | Column, alias: str) -> Column:
     return F.sum(money(col)).cast("double").alias(alias)
 
 
-def distinct_rows(df: DataFrame, cols: list[str] | None = None) -> DataFrame:
-    """``SELECT DISTINCT col1, col2`` — hash aggregate on the tuple."""
-    return (df.select(*cols) if cols else df).distinct()
-
-
-def count_distinct(df: DataFrame, col: str, alias: str) -> DataFrame:
-    """Exact COUNT(DISTINCT col) (expand-then-agg under the hood)."""
-    return df.agg(F.countDistinct(col).alias(alias))
-
-
 def group_agg(df: DataFrame, keys: list[str], *aggs: Column) -> DataFrame:
     """GROUP BY keys with arbitrary aggregate expressions."""
     return df.groupBy(*keys).agg(*aggs)
@@ -58,16 +48,6 @@ def group_agg(df: DataFrame, keys: list[str], *aggs: Column) -> DataFrame:
 def having(grouped: DataFrame, predicate: Column) -> DataFrame:
     """HAVING = filter over the aggregated result (extension)."""
     return grouped.filter(predicate)
-
-
-def rollup_agg(df: DataFrame, keys: list[str], *aggs: Column) -> DataFrame:
-    """GROUP BY ROLLUP (extension): subtotal rows with NULL keys."""
-    return df.rollup(*keys).agg(*aggs)
-
-
-def cube_agg(df: DataFrame, keys: list[str], *aggs: Column) -> DataFrame:
-    """GROUP BY CUBE (extension)."""
-    return df.cube(*keys).agg(*aggs)
 
 
 def grouped(df: DataFrame, keys: list[str]) -> GroupedData:

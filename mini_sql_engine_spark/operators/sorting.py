@@ -40,11 +40,6 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 
-def top_k(df: DataFrame, k: int, *keys: Column | str) -> DataFrame:
-    """Top-k by sort keys → TakeOrderedAndProject (no full sort)."""
-    return df.orderBy(*keys).limit(k)
-
-
 def _skinny_then_join(
     df: DataFrame, used: list[str], key_names: list[str],
     rank_fn, alias: str,

@@ -36,16 +36,6 @@ def exact_dedup(docs: DataFrame, text_col: str = "text") -> DataFrame:
     return docs.join(keep, ["doc_id", text_col], "left_semi")
 
 
-def exact_dedup_counts(docs: DataFrame) -> DataFrame:
-    """Distinct-document counts per language (Qkey shape)."""
-    return (
-        docs.select("text", "lang")
-        .distinct()
-        .groupBy("lang")
-        .agg(F.count(F.lit(1)).alias("n_unique_docs"))
-    )
-
-
 def _doc_shingles(docs: DataFrame, n: int, alias: str = "shingle") -> DataFrame:
     """(doc_id, <alias>) distinct pairs — the inverted-index input and
     the exploded shingle rows every per-doc hash kernel aggregates.

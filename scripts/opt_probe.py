@@ -60,6 +60,17 @@ def py4j_commands(spark):
         del client.send_command
 
 
+def probe_session(app_name: str = "opt-probe",
+                  extra_conf: dict[str, str] | None = None):
+    """The engine session the probes run on: ``get_spark`` without the
+    console progress bar, plus ``extra_conf``."""
+    return get_spark(
+        app_name=app_name,
+        extra_conf={"spark.ui.showConsoleProgress": "false",
+                    **(extra_conf or {})},
+    )
+
+
 def main() -> None:
     ap = argparse.ArgumentParser()
     ap.add_argument("keys", nargs="+")
@@ -73,10 +84,7 @@ def main() -> None:
 
     plans_dir = os.path.join(REPO, "plans", args.plans_dir)
     os.makedirs(plans_dir, exist_ok=True)
-    spark = get_spark(
-        app_name="opt-probe",
-        extra_conf={"spark.ui.showConsoleProgress": "false"},
-    )
+    spark = probe_session()
     # warm up JVM / codegen / parquet footers
     force(QUERIES["group_agg"](spark, args.sf_dir))
 

@@ -1,6 +1,8 @@
 """Per-operator unit tests on tiny inline DataFrames: empty inputs,
 nulls (the engine is a superset of the null-free reference), duplicate
-rows, partitioning-invariance (SURVEY.md §5.2.3)."""
+rows, partitioning-invariance (SURVEY.md §5.2.3). Operators that Qkeys
+reach as SQL text (filter, DISTINCT, UNION/EXCEPT, top-k, ROLLUP) are
+checked through ``spark.sql`` over the same kind of frames."""
 
 from __future__ import annotations
 
@@ -9,7 +11,6 @@ from pyspark.sql import functions as F
 from mini_sql_engine_spark.operators import (
     aggregates as AG,
     joins as J,
-    relational as R,
     sets as S,
     sorting as SO,
 )
@@ -21,13 +22,9 @@ def _df(spark, rows, schema):
 
 def test_filter_with_nulls(spark):
     df = _df(spark, [(1, 10), (2, None), (3, 40)], "id long, v long")
-    got = {r.id for r in R.where(df, R.compare("v", ">", 15)).collect()}
+    got = {r.id for r in
+           spark.sql("SELECT id FROM {df} WHERE v > 15", df=df).collect()}
     assert got == {3}  # null comparisons are NULL → filtered out (ANSI)
-
-
-def test_where_any_empty_predicates_is_identity(spark):
-    df = _df(spark, [(1,), (2,)], "id long")
-    assert R.where_any(df).count() == 2
 
 
 def test_group_agg_null_keys_form_a_group(spark):
@@ -39,7 +36,7 @@ def test_group_agg_null_keys_form_a_group(spark):
 
 def test_distinct_on_duplicate_rows(spark):
     df = _df(spark, [(1, "x")] * 5 + [(2, "y")], "id long, s string")
-    assert AG.distinct_rows(df).count() == 2
+    assert spark.sql("SELECT DISTINCT * FROM {df}", df=df).count() == 2
 
 
 def test_exact_sum_partitioning_invariant(spark):
@@ -64,17 +61,19 @@ def test_joins_tiny(spark):
 def test_set_ops_bag_vs_set_semantics(spark):
     a = _df(spark, [(1,), (1,), (2,)], "x long")
     b = _df(spark, [(1,), (3,)], "x long")
-    assert S.union_distinct(a, b).count() == 3
+    assert spark.sql("SELECT * FROM {a} UNION SELECT * FROM {b}",
+                     a=a, b=b).count() == 3
     assert {r.x for r in S.intersect(a, b).collect()} == {1}
     assert S.intersect_all(a, b).count() == 1
-    assert {r.x for r in S.except_(a, b).collect()} == {2}
+    assert [r.x for r in spark.sql(
+        "SELECT * FROM {a} EXCEPT SELECT * FROM {b}", a=a, b=b).collect()] == [2]
     assert sorted(r.x for r in S.except_all(a, b).collect()) == [1, 2]
 
 
 def test_top_k_deterministic_ties(spark):
     df = _df(spark, [(1, 5.0), (2, 5.0), (3, 5.0), (4, 1.0)], "id long, v double")
-    got = [r.id for r in
-           SO.top_k(df, 2, F.col("v").desc(), F.col("id")).collect()]
+    got = [r.id for r in spark.sql(
+        "SELECT id FROM {df} ORDER BY v DESC, id LIMIT 2", df=df).collect()]
     assert got == [1, 2]
 
 
@@ -95,7 +94,8 @@ def test_with_rank_global_positions(spark):
 def test_rollup_includes_grand_total(spark):
     df = _df(spark, [("a", "x", 1), ("a", "y", 2), ("b", "x", 3)],
              "k1 string, k2 string, v long")
-    rows = AG.rollup_agg(df, ["k1", "k2"], F.sum("v").alias("s")).collect()
+    rows = spark.sql("SELECT k1, k2, sum(v) AS s FROM {df} "
+                     "GROUP BY ROLLUP(k1, k2)", df=df).collect()
     total = [r for r in rows if r.k1 is None and r.k2 is None]
     assert len(total) == 1 and total[0].s == 6
     assert len(rows) == 3 + 2 + 1

@@ -26,12 +26,12 @@ def formatted(df) -> str:
 
 
 def test_filter_pushed_to_parquet_scan(spark):
-    p = formatted(Q.filter_cmp(spark, SF_SMOKE))
+    p = formatted(Q.QUERIES["filter_cmp"](spark, SF_SMOKE))
     assert "PushedFilters: [IsNotNull(l_quantity), GreaterThan(l_quantity,30" in p, p
 
 
 def test_projection_prunes_scan_columns(spark):
-    p = formatted(Q.project_cols(spark, SF_SMOKE))
+    p = formatted(Q.QUERIES["project_cols"](spark, SF_SMOKE))
     # ReadSchema must carry only the 3 projected columns
     read_schema = [ln for ln in p.splitlines() if "ReadSchema" in ln][0]
     assert "l_extendedprice" not in read_schema
@@ -123,12 +123,12 @@ def test_subqueries_decorrelate_to_semi_joins(spark):
     """EXISTS and IN must compile to semi hash joins — no correlated
     per-row re-execution, no cartesian — and the scalar subquery must
     appear as a one-time Subquery node, not a per-row plan."""
-    p = plan(Q.exists_subquery(spark, SF_SMOKE))
+    p = plan(Q.QUERIES["exists_subquery"](spark, SF_SMOKE))
     assert "LeftSemi" in p, p
     assert "CartesianProduct" not in p and "NestedLoop" not in p
-    p2 = plan(Q.in_subquery(spark, SF_SMOKE))
+    p2 = plan(Q.QUERIES["in_subquery"](spark, SF_SMOKE))
     assert "LeftSemi" in p2, p2
-    p3 = plan(Q.scalar_subquery(spark, SF_SMOKE))
+    p3 = plan(Q.QUERIES["scalar_subquery"](spark, SF_SMOKE))
     assert "Subquery" in p3, p3
     assert "CartesianProduct" not in p3
 
@@ -507,14 +507,14 @@ def test_lateral_decorrelates_to_window_group_limit(spark):
     """The correlated LIMIT subquery must become WindowGroupLimit +
     hash join — per-task top-k BEFORE the exchange, not a
     re-execution of the subquery per outer row."""
-    p = plan(Q.lateral_topn(spark, SF_SMOKE))
+    p = plan(Q.QUERIES["lateral_topn"](spark, SF_SMOKE))
     assert "WindowGroupLimit" in p, p
     assert "BroadcastNestedLoopJoin" not in p, p
 
 
 def test_exists_ineq_is_semi_join_with_residual(spark):
     """Equi half as the semi-join key, inequality as the residual."""
-    p = plan(Q.exists_ineq(spark, SF_SMOKE))
+    p = plan(Q.QUERIES["exists_ineq"](spark, SF_SMOKE))
     assert "LeftSemi" in p, p
     assert "l_shipdate" in p and "60" in p, p
 
@@ -684,7 +684,7 @@ def test_terms_per_lang_window_group_limit(spark):
 
 
 def test_event_trigrams_take_ordered(spark):
-    p = plan(Q.event_trigrams(spark, SF_SMOKE))
+    p = plan(Q.QUERIES["event_trigrams"](spark, SF_SMOKE))
     assert "TakeOrderedAndProject" in p, p
 
 

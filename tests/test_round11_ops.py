@@ -16,7 +16,7 @@ from tests.conftest import SF_SMOKE
 
 def test_lateral_topn_equals_window_reference(spark):
     got = {(r["n_name"], r["c_custkey"]): r["c_acctbal"]
-           for r in Q.lateral_topn(spark, SF_SMOKE).collect()}
+           for r in Q.QUERIES["lateral_topn"](spark, SF_SMOKE).collect()}
     cat = Catalog(spark, SF_SMOKE)
     c, n = cat.table("customer"), cat.table("nation")
     w = Window.partitionBy("c_nationkey").orderBy(
@@ -34,7 +34,7 @@ def test_lateral_topn_equals_window_reference(spark):
 
 
 def test_exists_ineq_residual_is_enforced(spark):
-    got = {r["o_orderkey"] for r in Q.exists_ineq(spark, SF_SMOKE).collect()}
+    got = {r["o_orderkey"] for r in Q.QUERIES["exists_ineq"](spark, SF_SMOKE).collect()}
     cat = Catalog(spark, SF_SMOKE)
     o, li = cat.table("orders"), cat.table("lineitem")
     j = (li.join(o, li.l_orderkey == o.o_orderkey)

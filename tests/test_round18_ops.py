@@ -30,7 +30,7 @@ def test_terms_per_lang_caps_and_orders(spark):
 
 
 def test_event_trigrams_reconcile(spark):
-    rows = Q.event_trigrams(spark, SF_SMOKE).collect()
+    rows = Q.QUERIES["event_trigrams"](spark, SF_SMOKE).collect()
     assert 0 < len(rows) <= 20
     ev = Catalog(spark, SF_SMOKE).table("events") \
         .orderBy("user_id", "ts", "event_id").collect()

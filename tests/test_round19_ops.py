@@ -390,7 +390,7 @@ def test_dup_threshold_sweep_monotone(spark):
 
 
 def test_funnel_windowed_tighter_than_unbounded(spark):
-    wr = Q.funnel_windowed(spark, SF_SMOKE).collect()[0]
+    wr = Q.QUERIES["funnel_windowed"](spark, SF_SMOKE).collect()[0]
     ub = Q.funnel(spark, SF_SMOKE).collect()[0]
     assert wr["n_view"] == ub["n_viewed"]
     assert wr["n_click_1h"] <= ub["n_clicked_after_view"]
@@ -602,7 +602,7 @@ def test_scd2_asof_one_row_per_active_customer(spark):
     latest change at or before the instant."""
     import datetime
 
-    rows = Q.scd2_asof(spark, SF_SMOKE).collect()
+    rows = Q.QUERIES["scd2_asof"](spark, SF_SMOKE).collect()
     from collections import Counter
     per = Counter(r["o_custkey"] for r in rows)
     assert per and max(per.values()) == 1

@@ -55,7 +55,7 @@ def test_part_introduction_cumulative(spark):
 def test_lines_per_order_trend_consistency(spark):
     li = Catalog(spark, SF_SMOKE).table("lineitem")
     o = Catalog(spark, SF_SMOKE).table("orders")
-    out = Q.lines_per_order_trend(spark, SF_SMOKE).collect()
+    out = Q.QUERIES["lines_per_order_trend"](spark, SF_SMOKE).collect()
     assert sum(r["n_lines"] for r in out) == li.count()
     # inner join ⇒ only orders that HAVE lineitems are counted
     n_with_lines = li.select("l_orderkey").distinct().count()

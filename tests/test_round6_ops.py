@@ -156,7 +156,7 @@ def test_adjacent_cosine_matches_numpy_on_testdata(spark):
 
 
 def test_not_in_with_null_list_matches_nothing(spark):
-    row = Q.not_in_nulls(spark, SF_SMOKE).collect()[0]
+    row = Q.QUERIES["not_in_nulls"](spark, SF_SMOKE).collect()[0]
     assert row["cnt_with_null"] == 0           # three-valued logic
     assert row["cnt_clean"] >= 0
     assert row["cnt_not_building"] > 0
@@ -229,5 +229,5 @@ def test_incremental_dedup_corpus_side_projects_hash_only(spark):
 def test_not_in_nulls_plans_null_aware_anti_join(spark):
     """Catalyst must plan the NOT IN as a null-aware anti join (NAAJ
     hash variant), not a nested-loop."""
-    p = plan(Q.not_in_nulls(spark, SF_SMOKE))
+    p = plan(Q.QUERIES["not_in_nulls"](spark, SF_SMOKE))
     assert "LeftAnti" in p, p
